@@ -92,18 +92,7 @@ object BenchCrawl {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.configure(spark)
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val dur = for { a <- i.submissionTime; b <- i.completionTime } yield b - a
-            System.err.println(
-              f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d wall=${dur.getOrElse(-1L)}%6dms run=${i.taskMetrics.executorRunTime}%7dms cpu=${i.taskMetrics.executorCpuTime / 1000000}%7dms gc=${i.taskMetrics.jvmGCTime}%6dms")
-          }
-        })
-    }
+    StageProfiler.setup(spark)
 
     pipelineThroughput(spark, n / 4, nHosts) // warm: codegen + JIT
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt

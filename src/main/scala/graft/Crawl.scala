@@ -28,6 +28,9 @@ import graft.gen.SimWeb
   * ≳10^10.5-URL geometry, operators/Seen.filterUnseenRouted). Counters are
   * byte-identical to the broadcast path (EngineSpec pins this); the knob
   * is pure execution strategy.
+  *
+  * SPARK_GRAFT_PROFILE=1 prints one `[stage]` line per completed Spark
+  * stage to stderr ([[StageProfiler]]).
   */
 object Crawl {
 
@@ -72,21 +75,7 @@ object Crawl {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.configure(spark)
-
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val dur = for {
-              a <- i.submissionTime; b <- i.completionTime
-            } yield b - a
-            System.err.println(
-              f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d wall=${dur.getOrElse(-1L)}%6dms cpu=${i.taskMetrics.executorRunTime}%7dms ${i.name.take(60)}")
-          }
-        })
-    }
+    StageProfiler.setup(spark)
 
     val store = new SnapshotStore(storeDir, spark)
     // SPARK_GRAFT_SINK_DIR: emit per-epoch fresh records + job-control
@@ -98,19 +87,8 @@ object Crawl {
       bloomRouted = sys.env.get("SPARK_GRAFT_BLOOM_ROUTED").contains("1"),
       // SPARK_GRAFT_SCHED_HEAD=0 disables the frontier-head fast path
       // (full pending scan per epoch) — batches are identical either way;
-      // the knob exists for A/B measurement and for geometries where
-      // hosts*K exceeds the pending set (head pays without saving)
+      // the knob exists for A/B measurement
       scheduleFromHead = !sys.env.get("SPARK_GRAFT_SCHED_HEAD").contains("0"),
-      // SPARK_GRAFT_HEAD_FRACTION: head cost-guard threshold over the
-      // exactly-tracked pending_rows counter (skip builds/refreshes when
-      // nHosts*K > fraction * pending). Default "inf" = head always
-      // engaged: the interleaved A/B at hosts*K ~50x pending still
-      // measured head-ON faster (BASELINE.md round 5). The knob exists
-      // for geometries an operator measures otherwise; SCHED_HEAD=0
-      // remains the hard off switch
-      headMaxPendingFraction = sys.env.get("SPARK_GRAFT_HEAD_FRACTION")
-        .map(s => if (s == "inf") Double.PositiveInfinity else s.toDouble)
-        .getOrElse(Double.PositiveInfinity),
       // SPARK_GRAFT_NEARDUP=1: near-dup each epoch's fetched docs against
       // the persisted corpus signatures (corpus_sim) and append the batch's
       // signatures — the steady-state training-data ingest shape. Resume-

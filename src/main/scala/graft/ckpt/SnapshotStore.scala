@@ -77,6 +77,13 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
   def readTable(m: Manifest, table: String): Option[DataFrame] =
     m.tables.get(table).filter(_.nonEmpty).map(ps => spark.read.parquet(ps: _*))
 
+  /** A data file, not a commit marker (`_SUCCESS`) or a dot-file (CRC
+    * sidecars): the one rule every listing in this store applies.
+    */
+  private def isDataFile(st: org.apache.hadoop.fs.FileStatus): Boolean =
+    st.isFile && !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith(".")
+
   /** Does `dir` (recursively) hold at least one data file? Root
     * consolidation drains source roots by rename BEFORE the manifest swap
     * commits, so a crash in that window leaves a referenced-but-file-less
@@ -88,12 +95,8 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
     */
   def hasDataFiles(dir: String): Boolean = {
     def rec(h: HPath): Boolean =
-      fc.util.listStatus(h).exists { st =>
-        if (st.isFile)
-          !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith(".")
-        else rec(st.getPath)
-      }
+      fc.util.listStatus(h).exists(st =>
+        if (st.isFile) isDataFile(st) else rec(st.getPath))
     val p = new HPath(dir)
     fc.util.exists(p) && rec(p)
   }
@@ -315,21 +318,14 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
     // a fold window with zero rows (every epoch in range emitted nothing —
     // a draining crawl) stages a part-less dir that parquet cannot
     // schema-infer, and there is nothing to fold anyway
-    val stagedHasFiles = fc.util.exists(new HPath(staged)) &&
-      fc.util.listStatus(new HPath(staged)).exists(st =>
-        st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-    if (!stagedHasFiles) {
+    if (!hasDataFiles(staged)) {
       fc.delete(new HPath(staged), true)
       return
     }
     val tDir = new HPath(new HPath(seenLocation), s"epoch=$target")
     val oldTargetFiles: Seq[HPath] =
       if (fc.util.exists(tDir))
-        fc.util.listStatus(tDir).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath)
+        fc.util.listStatus(tDir).toSeq.filter(isDataFile).map(_.getPath)
       else Seq.empty
     // additive append (mode=append, NOT the dynamic-overwrite appendSeen
     // path): new fold files land beside the old target files with
@@ -385,9 +381,8 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
       def walk(d: HPath): Long =
         fc.util.listStatus(d).map { st =>
           if (st.isDirectory) walk(st.getPath)
-          else if (st.getPath.getName.startsWith("_") ||
-            st.getPath.getName.startsWith(".")) 0L
-          else st.getLen
+          else if (isDataFile(st)) st.getLen
+          else 0L
         }.sum
       walk(hp)
     }
@@ -422,9 +417,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
     if (!fc.util.exists(src)) return 0
     val dst = new HPath(dstDir)
     fc.mkdir(dst, FsPermission.getDirDefault, true)
-    val files = fc.util.listStatus(src).filter(st => st.isFile &&
-      !st.getPath.getName.startsWith("_") &&
-      !st.getPath.getName.startsWith("."))
+    val files = fc.util.listStatus(src).filter(isDataFile)
     files.foreach(st =>
       fc.rename(st.getPath, new HPath(dst, prefix + st.getPath.getName)))
     files.length

@@ -1,11 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ckpt.SnapshotStore
-import graft.fetch.FetchSim
-import graft.functions.Canon
-import graft.operators.{Bloom, Extract, Sched, Seen}
+import graft.fetch.{FetchSim, MediaFetchSim}
+import graft.functions.{Banding, Canon}
+import graft.model.FetchTask
+import graft.operators.{Bloom, Extract, Multimodal, NearDup, Sched, Seen}
 
 /** Epoch-loop crawl engine (SURVEY.md §3.1 Spark trace; north rule).
   *
@@ -23,7 +24,7 @@ import graft.operators.{Bloom, Extract, Sched, Seen}
   * merge-on-read ([[FrontierLog]]) — nothing rewrites a crawl-sized table
   * inside an epoch — and between folds the scheduler READS a materialized
   * per-host top-K head instead of the pending frontier (batch-exact; see
-  * the head invariant in runEpoch), so a normal epoch neither writes nor
+  * the head invariant at headBudget), so a normal epoch neither writes nor
   * scans the full frontier. Fold epochs are bounded too: terminal
   * (fetched/failed) rows are absorbing, so each fold renames them out of
   * the staged base into the append-only frontier_archive — the fold
@@ -82,9 +83,9 @@ final class EpochDriver(
     // files are MERGE-MOVED (file renames, zero rewrite — these tables
     // are immutable appends, nothing ever needs resolution) into the
     // PERMANENT oldest root and a second manifest swap retires them — see
-    // consolidateRoots for why the target must be the oldest (files move
-    // at most once). Pure layout knob (view-identical,
-    // FrontierLogSpec/EngineSpec), so not resume-guarded
+    // consolidateAppendRoots for why the target must be the oldest. Pure
+    // layout knob (view-identical, FrontierLogSpec/EngineSpec), so not
+    // resume-guarded
     archiveMaxRoots: Int = 8,
     // near-dup each epoch's fetched documents against the persisted corpus
     // signature table and append the batch's signatures — the steady-state
@@ -110,29 +111,11 @@ final class EpochDriver(
     // schedule from the materialized frontier HEAD (top-K rows per host,
     // committed at each fold) instead of scanning the full pending
     // frontier every epoch. Batch-EXACT, never heuristic — see the head
-    // invariant at the fold commit below — and pure execution strategy
+    // invariant at headBudget — and pure execution strategy
     // (batches, counters and views are byte-identical either way, pinned
     // by FrontierLogSpec), so not resume-guarded. Requires folds to
     // refresh the head; with compactFrontierEvery=0 it never activates
     scheduleFromHead: Boolean = true,
-    // cost guard on head BUILDS: materialize/refresh the head only when
-    // its size bound (nHosts × K — headSlice can never exceed it) is at
-    // most this fraction of the exactly-tracked pending set
-    // (`pending_rows`, see below). Default ENGAGED everywhere
-    // (PositiveInfinity): an interleaved best-of-3 CLI A/B at the most
-    // head-hostile geometry available (hosts·K ~50× pending — 400k seeds,
-    // 5000 hosts, 60 s budget, minors every 4) measured the head-ON legs
-    // 4-9% FASTER than head-off on every trial (BASELINE.md round 5,
-    // correcting round 4's wave-contaminated 40%-slower note): a minor
-    // fold's refresh is one O(pending ∪ Δ) pass per `compactDeltaEvery`
-    // epochs, while the full path re-resolves O(pending + Δ log) EVERY
-    // epoch — the head never loses asymptotically, only shifts where the
-    // pass runs. The threshold remains for operators whose measured
-    // geometry says otherwise (CLI SPARK_GRAFT_HEAD_FRACTION); skipping a
-    // build leaves the exact full-view path (or a still-valid older
-    // head), so any setting is pure execution strategy — not
-    // resume-guarded
-    headMaxPendingFraction: Double = Double.PositiveInfinity,
     // K1/K2 external sink (file-backed stand-in for the reference's Kafka
     // REST bridge): per-epoch fresh records batch-emitted from the
     // executors, plus one job-control completion message per epoch.
@@ -148,6 +131,7 @@ final class EpochDriver(
     sinkBridge: Option[String] = None) {
 
   import spark.implicits._
+  import EpochDriver.{AppendRootTables, Commit, HeadKeys}
 
   // the bridge POST rides the sink's flush path: a bridge URL without a
   // sink dir would silently emit NOTHING over the wire — fail loudly at
@@ -187,58 +171,38 @@ final class EpochDriver(
     */
   private val cutRows: Long = Sched.budgetCut(epochBudgetMs, minDelayFloorMs)
 
-  /** Head-build cost guard: is a head of up to `kPerHost` rows/host worth
-    * materializing against a pending set of `pendingRows`? nHosts·K is an
-    * upper bound on the slice (headSlice keeps at most K rows per host and
-    * only hosts with pending rows contribute), so over-estimating skips
-    * conservatively — exactly the degenerate-geometry direction. An
-    * UNKNOWN pending count (legacy store resumed mid-crawl, before a major
-    * fold re-seeds the counter) engages the head as before the guard
-    * existed.
+  /** Output file count for a table of about `rows` rows: ~1M rows per
+    * file, capped at the session parallelism, so a small epoch writes one
+    * file instead of one near-empty file per shuffle partition — committed
+    * bytes scale with the batch, not with file-count constants
+    * (FrontierLogSpec pins the byte ratio).
     */
-  private def headWorthwhile(kPerHost: Long, pendingRows: Option[Long]): Boolean =
-    pendingRows.forall(p =>
-      nHosts.toDouble * kPerHost <= p.toDouble * headMaxPendingFraction)
+  private def filesFor(rows: Long): Int =
+    math.max(1L, math.min(rows / 1000000L + 1,
+      spark.sparkContext.defaultParallelism.toLong)).toInt
 
-  /** Merge-move an over-cap append-table root list into its OLDEST root;
-    * returns the one-root list for the manifest swap, or None under cap.
-    * ONE shared implementation for every append-rooted table
-    * (frontier_archive, corpus_sim, neardup_pairs, media_features) — the
-    * commit-before-move crash argument and the naming rule must not live
-    * in per-table copies that can drift.
-    *
-    * The target being the PERMANENT head root makes every file move at
-    * most once over the table's lifetime: later appends land AFTER the
-    * head in the manifest list, so a consolidated file is never a move
-    * source again. (The previous newest-root target re-prefixed and
-    * re-renamed the ENTIRE history every cycle — O(crawl age) renames per
-    * cycle, and names grew a prefix each pass toward the filesystem's
-    * 255-char component limit, a guaranteed eventual crash on a
-    * long-running crawl.) The r<i>- prefix disambiguates same-named files
-    * from different source roots within one pass; across passes the part
-    * files' write-job UUIDs already make names unique.
-    *
-    * Crash-safe by ordering: the epoch commit preceding this call
-    * references the old roots AND the head, renames keep each file in
-    * exactly one referenced location at every instant (multi-root reads
-    * stay complete and duplicate-free), and a crash mid-move leaves a
-    * still-over-cap list the next pass converges. Emptied roots leave the
-    * manifest at the swap and expire with the next sweep. `subdirs` names
-    * partition dirs inside each root (Seq("") = flat table).
+  /** The head-validity rule. A head of K rows/host built at epoch `he`
+    * still contains every host's true top-cut at epoch e iff
+    * K >= (e - he) * cut: each epoch consumes at most `cut` rows per host,
+    * rows only leave pending by being scheduled (so their transitions are
+    * in the delta), and scores never rise. Returns (he, K - (e - he) * cut)
+    * — the budget the head has left at `epoch` — or None when the manifest
+    * carries no head or the head was built under a different cut (per-host
+    * consumption bounds computed under one cut are meaningless under
+    * another). The scheduler may read the head iff the remainder is >= 0;
+    * a minor fold may refresh it iff the remainder is >= cut (the
+    * refreshed head must serve at least the next epoch).
     */
-  private def consolidateRoots(roots: Seq[String],
-      subdirs: Seq[String]): Option[Seq[String]] =
-    if (roots.size <= archiveMaxRoots) None
-    else {
-      val target = roots.head
-      roots.tail.zipWithIndex.foreach { case (root, i) =>
-        subdirs.foreach { sub =>
-          val suffix = if (sub.isEmpty) "" else s"/$sub"
-          store.moveFilesInto(s"$root$suffix", s"$target$suffix", s"r$i-")
-        }
-      }
-      Some(Seq(target))
-    }
+  private def headBudget(c: Map[String, Long], epoch: Long,
+      cut: Long): Option[(Long, Long)] =
+    for {
+      he <- c.get("head_epoch")
+      hk <- c.get("head_k")
+      if c.get("head_cut").contains(cut)
+    } yield (he, hk - (epoch - he) * cut)
+
+  private def headMeta(epoch: Long, k: Long, cut: Long): Map[String, Long] =
+    Map("head_epoch" -> epoch, "head_k" -> k, "head_cut" -> cut)
 
   /** Queue a robots refresh (new (host, crawl_delay_ms, disallow) rows —
     * the reference re-fetches robots.txt mid-crawl; the engine analog is a
@@ -289,23 +253,19 @@ final class EpochDriver(
     "cfg_media" -> (if (mediaDocs) 1L else 0L),
     "cfg_store_layout" -> EpochDriver.StoreLayoutVersion)
 
-  /** Guard keys added after stores already existed: a manifest missing the
-    * key is treated as having the value the code shipped with before the
-    * key was introduced, so a semantic change older than its guard key
-    * still refuses to resume instead of silently corrupting (a v1-hashed
+  /** Refuse to resume a snapshot whose config differs from this driver's
+    * or that lacks a cfg key. A missing key means the store was written by
+    * code older than the key: its meaning cannot be known (a v1-hashed
     * seen_bloom probed with v2 hashes returns false negatives — seen URLs
-    * would re-enter the frontier as fresh; a layout-1 store has no
-    * frontier_base/fetch_result tables to read).
+    * would re-enter the frontier as fresh), so it is refused, never
+    * defaulted. Both errors name the key.
     */
-  private val cfgLegacyDefaults: Map[String, Long] =
-    Map("cfg_bloom_hash_version" -> 1L, "cfg_store_layout" -> 1L,
-      "cfg_neardup" -> 0L, "cfg_media" -> 0L)
-
   private def requireCfgMatch(counters: Map[String, Long]): Unit =
     cfg.foreach { case (k, v) =>
-      counters.get(k).orElse(cfgLegacyDefaults.get(k)).foreach(pv =>
-        require(pv == v,
-          s"resume config mismatch: $k snapshot=$pv, this driver=$v"))
+      val pv = counters.get(k)
+      require(pv.contains(v), pv.fold(s"resume refused: snapshot has no " +
+        s"$k (written by an older store layout)")(p =>
+        s"resume config mismatch: $k snapshot=$p, this driver=$v"))
     }
 
   /** Initialize snapshot v0 from the ordered seed list. */
@@ -327,7 +287,7 @@ final class EpochDriver(
     // both invisible to readers (epoch gate) and overwritten on re-run
     store.appendSeen(seen, 0L)
     // every seed row starts pending: the exact pending_rows baseline the
-    // per-epoch arithmetic and the head cost guard build on
+    // per-epoch arithmetic builds on
     val nSeeds = frontier.count()
     // the head exists from epoch 0 (same slice a fold would build): the
     // first fold-cadence window of epochs schedules from O(hosts·K) rows
@@ -335,7 +295,7 @@ final class EpochDriver(
     val headK = (compactFrontierEvery.toLong + 1L) * cutRows
     val headDf =
       if (scheduleFromHead && compactFrontierEvery > 0 && headK > 0 &&
-          headWorthwhile(headK, Some(nSeeds)))
+          nSeeds > 0)
         Some(Sched.headSlice(frontier, headK).cache())
       else None
     val headCommit = headDf.filter(h => !h.isEmpty)
@@ -349,9 +309,7 @@ final class EpochDriver(
           ("seeds" -> nSeeds) +
           ("pending_rows" -> nSeeds) +
           ("robots_floor_ms" -> minDelayFloorMs) ++
-          (if (headCommit.isDefined)
-            Map("head_epoch" -> 0L, "head_k" -> headK, "head_cut" -> cutRows)
-          else Map.empty[String, Long]),
+          headCommit.map(_ => headMeta(0L, headK, cutRows)).getOrElse(Map.empty),
         partitionedBy = Map("frontier_base" -> "state"))
     } finally headDf.foreach(_.unpersist())
     ()
@@ -371,196 +329,48 @@ final class EpochDriver(
     }
   }
 
-  /** Run one epoch on top of the latest snapshot; returns epoch metrics. */
+  /** Epoch-scale caches and the Bloom broadcast, released when the epoch
+    * ends so a failed commit (retried by the caller) cannot leak them.
+    */
+  private final class EpochScope {
+    private val releases =
+      scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def onRelease(f: => Unit): Unit = releases += (() => f)
+    def cache(df: DataFrame): DataFrame = {
+      val c = df.cache()
+      onRelease(c.unpersist())
+      c
+    }
+    def release(): Unit = releases.foreach(_())
+  }
+
+  /** Run one epoch on top of the latest snapshot; returns epoch metrics.
+    * Stages run in order — robots, schedule, fetch, discover, dedup,
+    * transition, then the opt-in sink / near-dup / media stages — and each
+    * returns the part of the snapshot it changes; the frontier commit
+    * policy adds the frontier tables, and the parts go out as ONE commit.
+    */
   def runEpoch(): Map[String, Long] = {
     val m = store.latest().getOrElse(sys.error("store not initialized"))
     requireCfgMatch(m.counters)
     val epoch = m.epoch + 1
-    // bucketed scan: the (huge, append-only) seen side of the anti-join
-    // arrives pre-partitioned by hash(canon_url) — no big-side Exchange
-    val seen = store.readSeen(m.epoch)
-
-    // ---- robots in effect for THIS epoch (J3): a staged update wins (and
-    // is committed with this epoch's snapshot, so it survives resume); else
-    // the versioned store table (what every resume reads — the constructor
-    // generator is only the init resolution); a legacy pre-robots-table
-    // store self-migrates by committing the generator rows it crawled
-    // with. The delay floor rides the manifest counters, so the common
-    // path derives the cut with zero extra Spark work
     val staged = stagedRobots.get()
-    val (robotsEpoch, floorMs, robotsReplace) = staged match {
-      case Some(rows) =>
-        val df = Sched.robotsDf(spark, rows)
-        (df, floorOf(rows), Map("robots" -> df))
-      case None => m.tables.get("robots").filter(_.nonEmpty) match {
-        case Some(paths) =>
-          val df = robotsCache match {
-            case Some((p, d)) if p == paths => d
-            case _ =>
-              val d = store.readTable(m, "robots").get
-              robotsCache = Some((paths, d)); d
-          }
-          (df, m.counters.getOrElse("robots_floor_ms", minDelayFloorMs),
-            Map.empty[String, DataFrame])
-        case None => (robots, minDelayFloorMs, Map("robots" -> robots))
-      }
-    }
+    val (robotsEpoch, robotsPart) = robotsStage(m, staged)
+    val floorMs = robotsPart.counters("robots_floor_ms")
     val cut = Sched.budgetCut(epochBudgetMs, floorMs)
-    val robotsMeta = Map("robots_floor_ms" -> floorMs)
-    // a cut change PERMANENTLY invalidates any standing head, so the first
-    // epoch that runs under the new cut drops head + meta in its commit.
-    // Merely failing the head_cut check is not enough: epochs that run
-    // under a different cut consume up to THAT cut per host, so if the
-    // floor later reverted, the hk >= elapsed*cut validity arithmetic
-    // would under-count the mismatched epochs' consumption and re-validate
-    // an over-consumed head (hosts whose head rows are all terminal would
-    // silently schedule nothing until the next major fold)
-    val headCutStale = m.counters.contains("head_epoch") &&
-      m.counters.getOrElse("head_cut", cutRows) != cut
-    // cumulative fold-cost accounting (bytes written by major base rewrites
-    // and by minor delta resolves): pure ops visibility — the evidence that
-    // minor folds let the major cadence stretch is these two counters'
-    // RATIO in a CLI A/B, read straight out of the final manifest
-    val foldBytesMeta = m.counters.view.filterKeys(k =>
-      k == "fold_base_bytes" || k == "fold_delta_bytes").toMap
-
-    // epoch-scale caches + the Bloom broadcast, released in the finally
-    // block so a failed commit (retried by the caller) cannot leak them
-    var rankedC: Option[DataFrame] = None
-    var candDepthC: Option[DataFrame] = None
-    var freshC: Option[DataFrame] = None
-    var headC: Option[DataFrame] = None
-    var simNewC: Option[DataFrame] = None
-    var bloomBc: Option[org.apache.spark.broadcast.Broadcast[
-      graft.operators.SegmentedBloom]] = None
+    val scope = new EpochScope
     try {
-      // ---- schedule: W2 rank + T4 budget over the merged pending view.
-      // Head fast path: a head of K rows/host built at fold epoch `he`
-      // still contains every host's true top-cut at epoch e iff
-      // K >= (e - he) * cut — each epoch consumes at most `cut` rows per
-      // host, rows only leave pending by being scheduled (so their
-      // transitions are in the delta), and scores never rise. When valid,
-      // scheduling reads O(hosts*K + delta) rows instead of the whole
-      // pending frontier; when stale or absent (no fold yet, head
-      // disabled, resume from a headless store) it falls back to the full
-      // merge-on-read view. Both sources contain the true per-host
-      // top-cut, so the window + budget cut yield identical batches
-      // counters first, table read last: a permanently stale head (e.g.
-      // resume with folding off) must not pay a parquet schema read per
-      // epoch just to be discarded
-      // head_cut: the budget cut the head was built under. A robots
-      // update that changes the delay floor changes the cut — per-host
-      // consumption bounds computed under one cut are meaningless under
-      // another (a RAISED floor shrinks the cut and would make the stale
-      // check UNDER-count past consumption), so any cut change simply
-      // invalidates the head until the next fold rebuilds it
-      val headSrc: Option[(DataFrame, Long)] =
-        if (!scheduleFromHead) None
-        else for {
-          he <- m.counters.get("head_epoch")
-          hk <- m.counters.get("head_k")
-          if m.counters.getOrElse("head_cut", cutRows) == cut
-          if hk >= (epoch - he) * cut
-          h <- store.readTable(m, "frontier_head")
-        } yield (h, he)
-      lastSchedSource = if (headSrc.isDefined) "head" else "full"
-      val pendingSrc = headSrc.map(_._1).getOrElse(
-        store.readTable(m, "frontier_base").get)
-      // head path: the head already resolves every delta row with
-      // seq <= head_epoch (a fold-built head post-dates the dropped log; a
-      // minor-refreshed head absorbed the folded run), so prune the delta
-      // scan to strictly newer rows — each delta file is one epoch, so
-      // parquet min/max stats on seq skip old files (and the whole folded
-      // run) at footer cost. The full-view fallback must NOT prune: the
-      // base pre-dates every delta row
-      val deltaAll = store.readTable(m, "frontier_delta")
-      val deltaSrc = headSrc match {
-        case Some((_, he)) => deltaAll.map(_.filter(col("seq") > he))
-        case None => deltaAll
-      }
-      val pending = FrontierLog.pending(pendingSrc, deltaSrc)
-        .join(broadcast(robotsEpoch.select("host", "crawl_delay_ms")), Seq("host"), "left")
-        .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(defaultDelayMs)))
-      // cached: ranked is BATCH-sized after the budget cut, and both the
-      // fetch path and the frontier transitions consume it — without the
-      // cache the second consumer recomputes the full pending-frontier
-      // scan + window (a second O(frontier) pass per epoch)
-      val ranked = Sched.rankAndBudget(pending, epochBudgetMs,
-        floorMs).cache()
-      rankedC = Some(ranked)
+      val (ranked, deltaAll) = schedule(m, epoch, robotsEpoch, floorMs, cut,
+        scope)
       val batch = Sched.fetchBatch(ranked, epoch, saltBuckets,
         spark.sparkContext.defaultParallelism)
-
-      // ---- fetch (S1) — salted partitions, partition-local lineage. The
-      // full fetch output is made durable FIRST (the dir this commit will
-      // reference; a crash re-runs the deterministic fetch over the same
-      // batch into the same dir), then every consumer reads it
-      // column-pruned — transitions/counters never deserialize the spans
-      val fetchDir = store.stagingDir("fetch_result")
-      val fetchedDs = FetchSim.run(batch, seed, nHosts).toDF()
-      val fetchSchema = fetchedDs.schema
-      fetchedDs.write.mode("overwrite").parquet(fetchDir)
-      val fetched = spark.read.schema(fetchSchema).parquet(fetchDir)
+      val (fetchDir, fetched) = fetch(batch)
       val okDocs = fetched.filter(col("status") === "ok")
         .select(col("canon_url").as("doc_id"), col("depth"), col("spans"))
-
-      // ---- extract (S2/D2) + canon (X14) + robots filter (J3/F3)
-      val cand = Extract.canonCandidates(okDocs.select("doc_id", "spans"))
-      val candAllowed = Sched.allowed(cand, robotsEpoch, defaultDelayMs)
-        .select("canon_url", "host", "src_doc")
-      val candDepth = candAllowed
-        .join(okDocs.select(col("doc_id").as("src_doc"), col("depth")), Seq("src_doc"))
-        .groupBy("canon_url", "host")
-        .agg((min("depth") + 1).cast("int").as("depth"))
-        .cache()
-      candDepthC = Some(candDepth)
+      val candDepth = discover(okDocs, robotsEpoch, scope)
       val nDiscovered = candDepth.count()
-
-      // ---- dedup vs seen: Bloom prefilter (D3) + exact anti-join (J2).
-      // Segment merge runs on the executors (one final blob per segment
-      // reaches the driver); the broadcast handle is destroyed in the
-      // finally block so filter blobs never accumulate across epochs
-      val segTable = if (useBloom) store.readTable(m, "seen_bloom") else None
-      bloomBc =
-        if (bloomRouted) None
-        else segTable.map(df =>
-          Seen.broadcastSegments(spark,
-            Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment)))
-      val fresh = (if (bloomRouted && segTable.isDefined)
-          Seen.filterUnseenRouted(candDepth, "canon_url", seen,
-            segTable.get, bloomSegments)
-        else Seen.filterUnseen(candDepth, "canon_url", seen, bloomBc))
-        .withColumn("score", lit(1.0) / (lit(1.0) + col("depth")))
-        .withColumn("state", lit("pending"))
-        .withColumn("retry_count", lit(0))
-        .withColumn("discovered_epoch", lit(epoch))
-        .select("canon_url", "host", "depth", "score", "state", "retry_count",
-          "discovered_epoch")
-        .cache()
-      freshC = Some(fresh)
-
-      // ---- frontier delta: ONLY the scheduled rows transition (fetched ok
-      // → fetched; error → retry w/ score decay, dead at maxRetries —
-      // T5/T7); everything else rests untouched in base/older deltas. The
-      // inner join is batch-sized on both sides: the per-epoch frontier
-      // write is O(batch + fresh), never O(frontier)
-      val outcome = fetched.select(col("canon_url"), col("status").as("_status"))
-      val transitions = ranked
-        .select("canon_url", "host", "depth", "score", "state", "retry_count",
-          "discovered_epoch")
-        .join(outcome, Seq("canon_url"))
-        .withColumn("state",
-          when(col("_status") === "ok", lit("fetched"))
-            .when(col("_status") === "error" && col("retry_count") + 1 >= maxRetries,
-              lit("failed"))
-            .otherwise(col("state")))
-        .withColumn("score",
-          when(col("_status") === "error" && col("retry_count") + 1 < maxRetries,
-            col("score") * 0.5).otherwise(col("score")))
-        .withColumn("retry_count",
-          when(col("_status") === "error", col("retry_count") + 1)
-            .otherwise(col("retry_count")))
-        .drop("_status")
+      val fresh = dedup(m, candDepth, epoch, scope)
+      val transitions = transition(ranked, fetched)
       // one batch-sized pass over the post-transition states yields the
       // fetch outcome tallies AND the terminal-failure count the
       // pending_rows arithmetic needs (ok → fetched; error → failed at
@@ -579,475 +389,56 @@ final class EpochDriver(
         "discovered" -> nDiscovered,
         "deduped" -> (nDiscovered - nEmitted),
         "emitted" -> nEmitted)
-
       // pending_rows: exact by the state machine — rows enter pending only
       // as seeds (init) or fresh emissions, and leave only by
-      // transitioning to fetched/failed (retries stay pending). Carried
-      // through every commit so the head cost guard always has the current
-      // value; absent on a legacy store until the next major fold re-seeds
-      // it from the folded base's footers
-      val pendingNow: Option[Long] = m.counters.get("pending_rows")
-        .map(p => p + nEmitted - nFetched - nFailed)
-      val pendingMeta: Map[String, Long] =
-        pendingNow.map("pending_rows" -> _).toMap
-
+      // transitioning to fetched/failed (retries stay pending)
+      val pendingRows = m.counters("pending_rows") + nEmitted - nFetched -
+        nFailed
       val metricsDf = Seq((epoch, nFetched, nErrors, nDiscovered,
         nDiscovered - nEmitted, nEmitted))
         .toDF("epoch", "fetched", "errors", "discovered", "deduped", "emitted")
 
-      // ---- K1 record sink + K2 job-control message (kafka_producer.py
-      // send_crawling_completion semantics: count==0 ⇒ fail with reason, no
-      // wall clock — completed_at is virtual epoch time in KST)
-      sinkDir.foreach { d =>
-        graft.sinks.RecordSink.emit(
-          fresh.withColumn("epoch", lit(epoch)), "canon_url",
-          s"$d/frontier-records", tag = s"e$epoch", bridgeUrl = sinkBridge)
-        val completedAt = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
-          .plusMinutes(epoch).atOffset(java.time.ZoneOffset.ofHours(9))
-          .format(java.time.format.DateTimeFormatter.ofPattern(
-            "yyyy-MM-dd'T'HH:mm:ssxxx"))
-        val control = Seq((s"epoch_$epoch",
-          if (nEmitted > 0) "done" else "fail",
-          "collection",
-          if (nEmitted > 0) null else "review count 0",
-          nEmitted, completedAt))
-          .toDF("job_id", "status", "step", "failure_reason",
-            "expected_count", "completed_at")
-        graft.sinks.RecordSink.emit(control, "job_id", s"$d/job-control",
-          tag = s"e$epoch", bridgeUrl = sinkBridge)
-      }
-
-      // ---- incremental near-dup over the epoch's fetched documents (the
-      // q49 steady-state shape as an ENGINE stage): reassemble each ok
-      // doc's text from its spans in offset order (the q43 formulation),
-      // simhash the batch with the production xxhash64/64 path, probe the
-      // persisted corpus signatures — candidate work O(batch × bucket
-      // occupancy), old-old pairs never generated — and append the batch's
-      // signatures so the next epoch probes this one too. Banding geometry
-      // is re-derived per epoch from the cumulative doc count (B is a pure
-      // cost knob, never a recall knob — NearDupSpec), so signatures are
-      // geometry-free and a growing corpus widens its own banding.
-      val ndState: Option[(DataFrame, Option[String], Long, Long)] =
-        if (!nearDupDocs || nFetched == 0) None
-        else {
-          val batchText = okDocs
-            .select(col("doc_id"), explode(col("spans")).as("span"))
-            .groupBy("doc_id")
-            .agg(array_join(transform(array_sort(filter(
-                collect_list(struct(col("span.offset"), col("span.text"))),
-                x => x.getField("text") =!= "")),
-              x => x.getField("text")), " ").as("text"))
-          // TOTAL over the batch: explode drops a doc whose spans array is
-          // empty, so the reassembly alone would skip it — re-anchor on the
-          // fetched set and coalesce to "" so every fetched doc reaches the
-          // signature step (simhashTotal then assigns the empty-token
-          // signature 0L); the sim_docs counter and the corpus_sim row
-          // count stay equal BY CONSTRUCTION, not by corpus luck
-          val batchDocs = okDocs.select("doc_id")
-            .join(batchText, Seq("doc_id"), "left")
-            .na.fill("", Seq("text"))
-          // cached: the pairs probe and the commit write both consume the
-          // batch signatures
-          val simNew = graft.operators.NearDup.simhashTotal(batchDocs,
-            graft.operators.NearDup.XxHashBits,
-            graft.operators.NearDup.xxTokenHash).cache()
-          simNewC = Some(simNew)
-          val simDocs = m.counters.getOrElse("sim_docs", 0L) + nFetched
-          val blocks = graft.functions.Banding.blocksFor(simDocs,
-            hashBits = graft.operators.NearDup.XxHashBits)
-          val corpusSim = store.readTable(m, "corpus_sim")
-          val pairsDf = (corpusSim match {
-            case Some(c) => graft.operators.NearDup.incrementalFromSimhash(
-              simNew, c.select("doc_id", "simhash"), blocks,
-              graft.operators.NearDup.XxHashBits)
-            case None => graft.operators.NearDup.pairsFromSimhash(
-              simNew, blocks, graft.operators.NearDup.XxHashBits)
-          }).withColumn("epoch", lit(epoch))
-          // write-once, count from the written footers (the fetch_result
-          // pattern): the banded probe is the epoch's second-most-expensive
-          // plan, and a separate count() action would execute it twice. A
-          // crash re-runs the deterministic probe into the same dir
-          val pairsDir = store.stagingDir("neardup_pairs")
-          pairsDf.write.mode("overwrite").parquet(pairsDir)
-          val nPairs = spark.read.parquet(pairsDir).count()
-          if (nPairs == 0) store.deletePath(pairsDir) // row-less dir hazard
-          Some((simNew, if (nPairs > 0) Some(pairsDir) else None,
-            simDocs, nPairs))
-        }
-      // sim_docs carries forward across empty/disabled epochs like
-      // delta_rows: a counter absent from one manifest would reset the
-      // cumulative count (and the derived banding geometry) on the next
-      val ndCounters: Map[String, Long] =
-        if (!nearDupDocs) Map.empty
-        else ndState match {
-          case Some((_, _, simDocs, nPairs)) =>
-            Map("sim_docs" -> simDocs, "neardup_pairs" -> nPairs)
-          case None =>
-            Map("sim_docs" -> m.counters.getOrElse("sim_docs", 0L),
-              "neardup_pairs" -> 0L)
-        }
-
-      // ---- media feature extraction over the epoch's fetched documents
-      // (the media half of the interleaved corpus, mirroring the near-dup
-      // stage's text half): each ok doc's media spans resolve their
-      // media_ref through the simulated media fetch and decode through the
-      // production JDK pixel path — REAL container bytes, REAL raster
-      // decode, luma-grid embedding — inside one mapPartitions (payload
-      // bytes live only inside the task; the table stores features, never
-      // payloads, so nothing raster-sized ever shuffles or persists).
-      // Write-once staging + footer count, the neardup_pairs pattern.
-      val mediaState: Option[(String, Long)] =
-        if (!mediaDocs || nFetched == 0) None
-        else {
-          val refs = okDocs
-            .select(col("doc_id"), explode(col("spans")).as("span"))
-            .filter(col("span.kind") === "media" && col("span.media_ref") =!= "")
-            .select(col("doc_id"), col("span.media_ref").as("media_ref"),
-              col("span.offset").as("offset"))
-          val theSeed = seed
-          val feats = refs.as[(String, String, Int)].mapPartitions { it =>
-            // partition-local codec init (the extractFeatures posture)
-            java.lang.System.setProperty("java.awt.headless", "true")
-            javax.imageio.ImageIO.setUseCache(false)
-            it.map { case (doc, ref, off) =>
-              val payload = graft.fetch.MediaFetchSim.fetchBytes(ref, theSeed)
-              // shared decode-or-stub posture (incl. header-dims recovery
-              // for undecodable-but-headered bytes) — one implementation,
-              // so this stage and extractFeatures can never drift
-              val (w, h, emb, _) =
-                graft.operators.Multimodal.imageFeatures(payload)
-              (doc, ref, off, w, h, payload.length, emb)
-            }
-          }.toDF("doc_id", "media_ref", "offset", "width", "height",
-            "n_bytes", "embedding")
-          val dir = store.stagingDir("media_features")
-          // repartition AFTER the decode, never coalesce: coalesce is
-          // narrow, so it would collapse the uncached synth+decode map
-          // itself to the output file count — at small batches ONE task
-          // doing every JPEG round-trip (measured: +51 s/6-epoch run).
-          // The shuffle moves only feature rows (~hundreds of bytes each);
-          // file sizing tracks the fetched-doc count (spans/doc is a
-          // small corpus constant, so ~1M-row files up to that factor)
-          feats.repartition(math.max(1L, math.min(nFetched / 1000000L + 1,
-            spark.sparkContext.defaultParallelism.toLong)).toInt)
-            .write.mode("overwrite").parquet(dir)
-          val n = spark.read.parquet(dir).count()
-          if (n == 0) { store.deletePath(dir); None } // row-less dir hazard
-          else Some((dir, n))
-        }
-      // media_rows carries forward like sim_docs: an absent counter would
-      // read as a reset corpus on the next manifest
-      val mdCounters: Map[String, Long] =
-        if (!mediaDocs) Map.empty
-        else Map("media_rows" -> (m.counters.getOrElse("media_rows", 0L) +
-          mediaState.map(_._2).getOrElse(0L)))
-      val mdAppendPaths: Map[String, Seq[String]] =
-        mediaState.map(s => "media_features" -> Seq(s._1)).toMap
+      sinkDir.foreach(emitSink(_, fresh, epoch, nEmitted))
+      val ndPart =
+        if (nearDupDocs) nearDup(m, okDocs, nFetched, epoch, scope) else Commit()
+      val mdPart = if (mediaDocs) media(m, okDocs, nFetched) else Commit()
 
       // seen + its Bloom segments are append-only: each epoch contributes
       // only its fresh URLs; seen goes to the bucketed table
       // (epoch-partitioned, idempotent overwrite — see SnapshotStore),
-      // Bloom readers OR-merge segments. The frontier delta appends the
-      // same way; a compaction epoch folds base+deltas into a fresh base
-      // and drops the log (merge-on-read view identical either way)
+      // Bloom readers OR-merge segments
       store.appendSeen(fresh.select("canon_url"), epoch)
       val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
         "canon_url", bloomSegments, bloomBitsPerSegment)
-      val appendTables = Map(
-        "seen_bloom" -> bloomNew,
-        "metrics" -> metricsDf) ++
-        // signature file sizing tracks the BATCH's row count (the deltaDf
-        // rule below): the cached plan carries the probe's shuffle
-        // partitioning, which at small batches would strew one near-empty
-        // file per partition into a table read every epoch
-        ndState.map { case (simNew, _, _, _) => "corpus_sim" ->
-          simNew.coalesce(math.max(1L, math.min(nFetched / 1000000L + 1,
-            spark.sparkContext.defaultParallelism.toLong)).toInt) }
-      val ndAppendPaths: Map[String, Seq[String]] =
-        ndState.flatMap(_._2).map(d => "neardup_pairs" -> Seq(d)).toMap
-      // delta file sizing tracks the DELTA's row count (~1M rows/file,
-      // capped at the session parallelism), so a small epoch writes one
-      // file instead of one near-empty file per shuffle partition — the
-      // committed bytes scale with the batch, not with file-count
-      // constants (FrontierLogSpec pins the byte ratio). Deltas are plain
-      // parquet (state as a data column): appended dirs are read as one
-      // multi-root table, where hive-style partition inference would
-      // reject the multiple roots
+      // Deltas are plain parquet (state as a data column): appended dirs
+      // are read as one multi-root table, where hive-style partition
+      // inference would reject the multiple roots
       val deltaRows = nFetched + nErrors + nEmitted
-      val deltaDf = transitions.unionByName(fresh)
-        .withColumn("seq", lit(epoch))
-        .repartition(math.max(1L, math.min(deltaRows / 1000000L + 1,
-          spark.sparkContext.defaultParallelism.toLong)).toInt)
-      val emptyDelta = deltaRows == 0
-      if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0) {
-        val folded = FrontierLog.resolve(
-          if (emptyDelta) frontierAll(m) else frontierAll(m).unionByName(deltaDf))
-        // stage the fold once (state-partitioned, same dir the commit
-        // names), then derive the HEAD from the written bytes — the
-        // top-(R+1)*cut rows per host, the only rows the next R epochs of
-        // scheduling can possibly touch (head invariant above). Building
-        // it here rides the fold's amortization: one extra host-keyed
-        // top-k pass over the pending slice every R epochs buys every
-        // in-between epoch a head-sized scheduler read
-        val foldDir = store.stagingDir("frontier_base")
-        folded.write.mode("overwrite").partitionBy("state").parquet(foldDir)
-        // bytes this major fold REWROTE (measured before terminals rename
-        // out: the write cost was paid for them too)
-        val foldBaseBytes = m.counters.getOrElse("fold_base_bytes", 0L) +
-          store.pathBytes(foldDir)
-        // ---- archive-by-rename: fetched/failed are ABSORBING (a URL enters
-        // the frontier exactly once — candidates are anti-joined against
-        // seen — and only pending rows are ever scheduled), so the fold's
-        // terminal partitions are immutable forever. MOVE them — an O(1)
-        // directory rename inside the uncommitted staging space, crash-safe
-        // by the same argument as every staged write — into the append-only
-        // frontier_archive table instead of carrying them through every
-        // later fold: fold I/O is O(pending wavefront + delta window),
-        // independent of crawl AGE, where re-resolving the full frontier
-        // would re-write the ever-growing terminal history (≫ pending on a
-        // long crawl) every R epochs. A resumed v2-layout store (its whole
-        // terminal history still inside frontier_base) migrates itself on
-        // its first fold — the history leaves the fold window by one rename
-        // per state and is never rewritten again.
-        val hasPending = store.pathExists(s"$foldDir/state=pending")
-        val archDirs: Seq[String] =
-          if (!hasPending) Seq.empty // draining fold (no pending rows left):
-            // keep the terminals in the base so the committed dir is never
-            // a row-less parquet root that later reads cannot schema-infer
-          else {
-            val arch = store.stagingDir("frontier_archive")
-            store.deletePath(arch) // clobber a crashed attempt's orphan
-            val moved = Seq("fetched", "failed")
-              .filter(st => store.pathExists(s"$foldDir/state=$st"))
-            moved.foreach(st =>
-              store.movePath(s"$foldDir/state=$st", s"$arch/state=$st"))
-            if (moved.isEmpty) Seq.empty else Seq(arch)
-          }
-        val headK = (compactFrontierEvery.toLong + 1L) * cut
-        // the fold just materialized the exact pending set — count it from
-        // the written footers (count(*) over parquet is metadata-only, no
-        // data pages) to re-seed pending_rows and drive the head guard
-        val foldedPending =
-          spark.read.parquet(foldDir).filter(col("state") === "pending")
-        val pendingCount = if (hasPending) foldedPending.count() else 0L
-        // cached: the emptiness probe below and the committed write both
-        // consume the head — uncached, the per-host window over the fold's
-        // full pending slice would execute twice per fold epoch. The cost
-        // guard skips the build entirely when hosts·K ≳ pending: the extra
-        // window sort + head write would cost ~another fold for a head
-        // that saves ~nothing per epoch
-        val headOpt =
-          if (scheduleFromHead && headWorthwhile(headK, Some(pendingCount)))
-            Some(Sched.headSlice(foldedPending, headK).cache())
-          else None
-        headC = headOpt
-        // a frontier-draining fold produces an EMPTY head; committing it
-        // would leave a row-less parquet dir the next epoch cannot
-        // schema-infer (the delta append guards the identical hazard) —
-        // commit no head instead and drop any stale one, so the next
-        // epoch takes the full-view path and terminates normally. A
-        // guard-skipped build takes the same path: the base rewrite +
-        // dropped delta log invalidate any older head regardless
-        val headEmpty = headOpt.forall(_.isEmpty)
-        // the Bloom blob log folds here too: OR-merge every appended
-        // (epoch, segment) row plus this epoch's into one row per segment,
-        // so the per-epoch filter read merges O(segments + R) blobs, not
-        // O(epochs × segments) — OR is associative, so bit-identical
-        val bloomFolded = Bloom.foldSegments(
-          store.readTable(m, "seen_bloom") match {
-            case Some(prev) =>
-              prev.select("segment_id", "bloom").unionByName(bloomNew)
-            case None => bloomNew
-          })
-        val mFold = store.commit(epoch,
-          replace = (headOpt match {
-            case Some(h) if !headEmpty => Map("frontier_head" -> h)
-            case _ => Map.empty[String, DataFrame]
-          }) +
-            ("seen_bloom" -> bloomFolded) ++ robotsReplace,
-          replacePaths = Map("frontier_base" -> Seq(foldDir)),
-          append = appendTables - "seen_bloom",
-          counters = cfg ++ counters ++ ndCounters ++ mdCounters ++ robotsMeta ++
-            foldBytesMeta + ("fold_base_bytes" -> foldBaseBytes) +
-            ("pending_rows" -> pendingCount) ++
-            (if (headEmpty) Map.empty[String, Long]
-             else Map("head_epoch" -> epoch, "head_k" -> headK,
-               "head_cut" -> cut)),
-          appendPaths = Map("fetch_result" -> Seq(fetchDir)) ++
-            ndAppendPaths ++ mdAppendPaths ++
-            (if (archDirs.nonEmpty) Map("frontier_archive" -> archDirs)
-             else Map.empty),
-          drop = if (headEmpty) Set("frontier_delta", "frontier_head")
-            else Set("frontier_delta"))
-        // ---- archive-root consolidation: consolidateRoots (rename-only,
-        // into the PERMANENT oldest root — files move at most once). Newer
-        // roots end up holding only marker files; after the swap they are
-        // unreferenced and expire
-        val archRoots = mFold.tables.getOrElse("frontier_archive", Seq.empty)
-        consolidateRoots(archRoots, Seq("state=fetched", "state=failed"))
-          .foreach(kept =>
-            store.commit(epoch, replace = Map.empty, append = Map.empty,
-              counters = mFold.counters,
-              replacePaths = Map("frontier_archive" -> kept)))
-      } else {
-        // an all-empty epoch appends no delta: an empty parquet dir at the
-        // head of the delta list would break schema inference on read.
-        // head_epoch/head_k ride every manifest so the validity check
-        // above survives commits that don't touch the head — EXCEPT when
-        // this epoch's cut diverged from the head's (headCutStale): then
-        // head + meta leave the store now, before a floor revert could
-        // ever re-validate the over-consumed head
-        val headMeta: Map[String, Long] =
-          if (headCutStale) Map.empty
-          else m.counters.view
-            .filterKeys(k => k == "head_epoch" || k == "head_k" ||
-              k == "head_cut").toMap
-        val headDrop: Set[String] =
-          if (headCutStale) Set("frontier_head") else Set.empty
-        // delta_rows: upper bound on the delta table's rows, carried for
-        // minor-fold file sizing only (a fold's repartition must track the
-        // run's magnitude, not a file-count constant). Major folds drop the
-        // log and the counter together
-        val deltaRowsBound =
-          m.counters.getOrElse("delta_rows", 0L) + deltaRows
-        // fold only when there is something to fold: new delta rows, or a
-        // log of more than one run (an empty epoch over an already-folded
-        // single run would rewrite identical bytes). The prior log is
-        // deltaAll, already read ONCE for this epoch's schedule — a second
-        // readTable here would pay the delta list's file-listing + footer
-        // read again on every non-fold epoch for nothing
-        val minorFold = compactDeltaEvery > 0 &&
-          epoch % compactDeltaEvery == 0 &&
-          (if (emptyDelta) m.tables.get("frontier_delta").exists(_.size > 1)
-           else true) &&
-          (deltaAll.isDefined || !emptyDelta)
-        if (!minorFold) {
-          store.commit(epoch,
-            replace = robotsReplace,
-            append = if (emptyDelta) appendTables
-              else appendTables + ("frontier_delta" -> deltaDf),
-            counters = cfg ++ counters ++ ndCounters ++ mdCounters ++ robotsMeta ++
-              foldBytesMeta ++ pendingMeta ++ headMeta +
-              ("delta_rows" -> deltaRowsBound),
-            appendPaths = Map("fetch_result" -> Seq(fetchDir)) ++
-              ndAppendPaths ++ mdAppendPaths,
-            drop = headDrop)
-        } else {
-          // ---- MINOR fold: resolve the delta LOG into one run (latest row
-          // per key — view-identical, the same resolution the major fold
-          // would apply) and refresh the head from head ∪ delta. Touches
-          // O(delta window) bytes; the base is NEVER read or written here —
-          // this is what lets the major O(pending) rewrite cadence stretch
-          // while the delta list and the scheduler head stay compact.
-          val allDelta = (deltaAll, emptyDelta) match {
-            case (Some(p), false) => p.unionByName(deltaDf)
-            case (Some(p), true) => p
-            case (None, _) => deltaDf
-          }
-          val runDir = store.stagingDir("frontier_delta")
-          FrontierLog.resolve(allDelta)
-            .repartition(math.max(1L, math.min(deltaRowsBound / 1000000L + 1,
-              spark.sparkContext.defaultParallelism.toLong)).toInt)
-            .write.mode("overwrite").parquet(runDir)
-          val foldDeltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) +
-            store.pathBytes(runDir)
-          // Head refresh: head' = top-K' per host of pending(head ∪ delta),
-          // K' = hk − (epoch − he)·cut (the budget not yet consumable since
-          // the head was built). Exactness: the head at `he` contained the
-          // true per-host top-hk; since then ≤ (epoch−he)·cut rows per host
-          // left pending (only scheduled rows transition) and every touched
-          // or fresh row is in the delta, so pending(head ∪ delta) ⊇ the
-          // true per-host top-K' — and its top-K' slice EQUALS the true
-          // top-K' (same total order as the scheduler). Re-dating the head
-          // to `epoch` with budget K' makes the standard validity check
-          // exact, and sweeps consumed rows out of storage. Skipped when
-          // K' < cut — such a head could never serve even the next epoch
-          // (and by the same arithmetic the old head is stale for every
-          // later epoch too, so keeping its meta unchanged is harmless)
-          // the refresh arithmetic is exact only under an unchanged cut
-          // (same reasoning as the scheduling validity check above): a cut
-          // change leaves the head un-refreshed and the check drops it
-          // the cost guard applies to refreshes exactly as to builds:
-          // skipping leaves the old head meta carried unchanged — the head
-          // simply goes stale by the validity arithmetic and later epochs
-          // take the exact full-view path
-          val headRefresh: Option[(DataFrame, Long)] = for {
-            he <- m.counters.get("head_epoch")
-            hk <- m.counters.get("head_k")
-            // the hard off switch skips refreshes too: a store resumed
-            // with the head path disabled must not keep paying the
-            // per-host window sort for a head no scheduler reads (meta is
-            // carried unchanged, so a later head-on resume re-validates
-            // against the true elapsed-epoch consumption)
-            if scheduleFromHead
-            if m.counters.getOrElse("head_cut", cutRows) == cut
-            kRem = hk - (epoch - he) * cut
-            if kRem >= cut
-            if headWorthwhile(kRem, pendingNow)
-            h <- store.readTable(m, "frontier_head")
-          } yield (Sched.headSlice(
-            FrontierLog.pendingResolved(h,
-              Some(allDelta.filter(col("seq") > he))), kRem).cache(), kRem)
-          headC = headRefresh.map(_._1)
-          // a drained head (all consumed, nothing fresh) must not commit:
-          // a row-less parquet dir breaks schema inference, and pending
-          // rows may still exist below the original cut — drop head + meta
-          // so later epochs take the exact full-view path
-          val headEmpty = headRefresh.exists(_._1.isEmpty)
-          store.commit(epoch,
-            replace = (headRefresh match {
-              case Some((h, _)) if !headEmpty => Map("frontier_head" -> h)
-              case _ => Map.empty[String, DataFrame]
-            }) ++ robotsReplace,
-            replacePaths = Map("frontier_delta" -> Seq(runDir)),
-            append = appendTables,
-            counters = cfg ++ counters ++ ndCounters ++ mdCounters ++ robotsMeta ++
-              foldBytesMeta ++ pendingMeta +
-              ("fold_delta_bytes" -> foldDeltaBytes) ++
-              (headRefresh match {
-                case Some((_, k)) if !headEmpty =>
-                  Map("head_epoch" -> epoch, "head_k" -> k, "head_cut" -> cut)
-                case Some(_) => Map.empty[String, Long] // drained: meta dropped
-                // no refresh: carry unchanged — unless the cut diverged,
-                // which retires head + meta for good (headCutStale above)
-                case None => headMeta
-              }) +
-              ("delta_rows" -> deltaRowsBound),
-            appendPaths = Map("fetch_result" -> Seq(fetchDir)) ++
-              ndAppendPaths ++ mdAppendPaths,
-            drop = if (headEmpty) Set("frontier_head") else headDrop)
-        }
-      }
-      // ---- per-epoch append-root consolidation (consolidateRoots, shared
-      // with the archive): corpus_sim gains one parquet root per
-      // epoch-with-fetches and is read on the EPOCH PATH (the banded
-      // probe), neardup_pairs and media_features one per such epoch —
-      // unbounded, every listing and manifest growing linearly with crawl
-      // AGE. Over the cap the newer roots' files merge-move (renames, zero
-      // rewrite — all three are immutable appends, no resolution exists to
-      // skip) into the permanent oldest root and the manifest swaps to
-      // that one root. Emptied roots drop out at the swap and expire with
-      // the next
-      // expireUnreferenced sweep
-      val appendRootTables =
-        (if (nearDupDocs) Seq("corpus_sim", "neardup_pairs") else Seq.empty) ++
-          (if (mediaDocs) Seq("media_features") else Seq.empty)
-      if (appendRootTables.nonEmpty) {
-        val mNow = store.latest().get
-        val swaps = appendRootTables.flatMap { t =>
-          consolidateRoots(mNow.tables.getOrElse(t, Seq.empty), Seq(""))
-            .map(t -> _)
-        }
-        if (swaps.nonEmpty)
-          store.commit(epoch, replace = Map.empty, append = Map.empty,
-            counters = mNow.counters, replacePaths = swaps.toMap)
-      }
+      val delta = Option.when(deltaRows > 0)(transitions.unionByName(fresh)
+        .withColumn("seq", lit(epoch)).repartition(filesFor(deltaRows)))
+      val frontierPart = frontierCommit(m, epoch, cut, deltaAll, delta,
+        deltaRows, pendingRows, bloomNew, scope)
+
+      // cumulative fold-cost accounting (bytes written by major base
+      // rewrites and by minor delta resolves) is carried here and
+      // overridden by the fold that adds to it
+      val foldBytes = m.counters.view.filterKeys(k =>
+        k == "fold_base_bytes" || k == "fold_delta_bytes").toMap
+      val c = Commit(
+        append = Map("metrics" -> metricsDf),
+        appendPaths = Map("fetch_result" -> Seq(fetchDir)),
+        counters = cfg ++ counters ++ foldBytes +
+          ("pending_rows" -> pendingRows)) ++
+        robotsPart ++ ndPart ++ mdPart ++ frontierPart
+      val committed = store.commit(epoch, c.replace, c.append, c.counters,
+        appendPaths = c.appendPaths, replacePaths = c.replacePaths,
+        drop = c.drop)
+      consolidateAppendRoots(committed)
       // seen compaction is GENERATIONAL (tier-1: fold only this cadence
       // window's partitions — O(R × batch) I/O, older generations never
       // touched), with a rare tier-2 full fold when generation partitions
       // themselves accumulate — amortized full-rewrite cost O(total /
-      // SeenFullFoldPartitions) instead of the old always-full fold's
-      // O(total) every cadence. Tier-2 also sweeps up any range a crashed
+      // SeenFullFoldPartitions). Tier-2 also sweeps up any range a crashed
       // compaction left unfolded (folds are file-count hygiene, never
       // needed for correctness: appends are disjoint by the anti-join)
       if (compactSeenEvery > 0 && epoch % compactSeenEvery == 0) {
@@ -1062,15 +453,534 @@ final class EpochDriver(
       // epoch, not be wiped with the one just committed — including one
       // that lands between reading the field and clearing it
       if (staged.isDefined) stagedRobots.compareAndSet(staged, None)
-      counters ++ ndCounters ++ mdCounters
-    } finally {
-      rankedC.foreach(_.unpersist())
-      candDepthC.foreach(_.unpersist())
-      freshC.foreach(_.unpersist())
-      headC.foreach(_.unpersist())
-      simNewC.foreach(_.unpersist())
-      bloomBc.foreach(_.destroy())
+      counters ++ ndPart.counters ++ mdPart.counters
+    } finally scope.release()
+  }
+
+  /** Robots in effect for this epoch (J3): a staged update wins (and is
+    * committed with this epoch's snapshot, so it survives resume); else the
+    * versioned store table — what every resume reads; the constructor
+    * generator is only the init resolution. The delay floor rides the
+    * manifest counters, so the common path derives the cut with zero extra
+    * Spark work.
+    */
+  private def robotsStage(m: store.Manifest,
+      staged: Option[Seq[(String, Long, Seq[String])]]): (DataFrame, Commit) =
+    staged match {
+      case Some(rows) =>
+        val df = Sched.robotsDf(spark, rows)
+        (df, Commit(replace = Map("robots" -> df),
+          counters = Map("robots_floor_ms" -> floorOf(rows))))
+      case None =>
+        val paths = m.tables("robots")
+        val df = robotsCache match {
+          case Some((p, d)) if p == paths => d
+          case _ =>
+            val d = store.readTable(m, "robots").get
+            robotsCache = Some((paths, d)); d
+        }
+        (df, Commit(
+          counters = Map("robots_floor_ms" -> m.counters("robots_floor_ms"))))
     }
+
+  /** Schedule: W2 rank + T4 budget over the merged pending view. Returns
+    * the batch-sized ranked rows and the delta log as read this epoch.
+    *
+    * When the head is valid (headBudget), scheduling reads O(hosts*K +
+    * delta) rows instead of the whole pending frontier; when stale or
+    * absent (no fold yet, head disabled, resume from a headless store) it
+    * falls back to the full merge-on-read view. Both sources contain the
+    * true per-host top-cut, so the window + budget cut yield identical
+    * batches. Counters are checked first, the table read last: a
+    * permanently stale head must not pay a parquet schema read per epoch
+    * just to be discarded.
+    */
+  private def schedule(m: store.Manifest, epoch: Long, robotsEpoch: DataFrame,
+      floorMs: Long, cut: Long,
+      scope: EpochScope): (DataFrame, Option[DataFrame]) = {
+    val headSrc: Option[(DataFrame, Long)] =
+      if (!scheduleFromHead) None
+      else for {
+        (he, rem) <- headBudget(m.counters, epoch, cut)
+        if rem >= 0
+        h <- store.readTable(m, "frontier_head")
+      } yield (h, he)
+    lastSchedSource = if (headSrc.isDefined) "head" else "full"
+    val pendingSrc = headSrc.map(_._1).getOrElse(
+      store.readTable(m, "frontier_base").get)
+    // head path: the head already resolves every delta row with
+    // seq <= head_epoch (a fold-built head post-dates the dropped log; a
+    // minor-refreshed head absorbed the folded run), so prune the delta
+    // scan to strictly newer rows — each delta file is one epoch, so
+    // parquet min/max stats on seq skip old files (and the whole folded
+    // run) at footer cost. The full-view fallback must NOT prune: the
+    // base pre-dates every delta row
+    val deltaAll = store.readTable(m, "frontier_delta")
+    val deltaSrc = headSrc match {
+      case Some((_, he)) => deltaAll.map(_.filter(col("seq") > he))
+      case None => deltaAll
+    }
+    val pending = FrontierLog.pending(pendingSrc, deltaSrc)
+      .join(broadcast(robotsEpoch.select("host", "crawl_delay_ms")), Seq("host"), "left")
+      .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(defaultDelayMs)))
+    // cached: ranked is BATCH-sized after the budget cut, and both the
+    // fetch path and the frontier transitions consume it — without the
+    // cache the second consumer recomputes the full pending-frontier
+    // scan + window (a second O(frontier) pass per epoch)
+    (scope.cache(Sched.rankAndBudget(pending, epochBudgetMs, floorMs)),
+      deltaAll)
+  }
+
+  /** Fetch (S1): salted partitions, partition-local lineage. The full fetch
+    * output is made durable FIRST (the dir this epoch's commit will
+    * reference; a crash re-runs the deterministic fetch over the same batch
+    * into the same dir), then every consumer reads it column-pruned —
+    * transitions/counters never deserialize the spans. Returns the dir and
+    * the re-read table.
+    */
+  private def fetch(batch: Dataset[FetchTask]): (String, DataFrame) = {
+    val dir = store.stagingDir("fetch_result")
+    val fetchedDs = FetchSim.run(batch, seed, nHosts).toDF()
+    fetchedDs.write.mode("overwrite").parquet(dir)
+    (dir, spark.read.schema(fetchedDs.schema).parquet(dir))
+  }
+
+  /** Extract (S2/D2) + canon (X14) + robots filter (J3/F3): the allowed
+    * outbound URLs of the ok docs, each at its minimum depth (cached: it is
+    * counted, then anti-joined).
+    */
+  private def discover(okDocs: DataFrame, robotsEpoch: DataFrame,
+      scope: EpochScope): DataFrame = {
+    val cand = Extract.canonCandidates(okDocs.select("doc_id", "spans"))
+    scope.cache(Sched.allowed(cand, robotsEpoch, defaultDelayMs)
+      .select("canon_url", "host", "src_doc")
+      .join(okDocs.select(col("doc_id").as("src_doc"), col("depth")), Seq("src_doc"))
+      .groupBy("canon_url", "host")
+      .agg((min("depth") + 1).cast("int").as("depth")))
+  }
+
+  /** Dedup vs seen: Bloom prefilter (D3) + exact anti-join (J2); returns
+    * the fresh frontier rows (cached). The seen side is a bucketed scan,
+    * pre-partitioned by hash(canon_url), so no big-side Exchange. Segment
+    * merge runs on the executors (one final blob per segment reaches the
+    * driver); the broadcast is destroyed with the epoch scope so filter
+    * blobs never accumulate across epochs.
+    */
+  private def dedup(m: store.Manifest, candDepth: DataFrame, epoch: Long,
+      scope: EpochScope): DataFrame = {
+    val seen = store.readSeen(m.epoch)
+    val segTable = if (useBloom) store.readTable(m, "seen_bloom") else None
+    val bloomBc =
+      if (bloomRouted) None
+      else segTable.map(df =>
+        Seen.broadcastSegments(spark,
+          Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment)))
+    bloomBc.foreach(bc => scope.onRelease(bc.destroy()))
+    val unseen =
+      if (bloomRouted && segTable.isDefined)
+        Seen.filterUnseenRouted(candDepth, "canon_url", seen,
+          segTable.get, bloomSegments)
+      else Seen.filterUnseen(candDepth, "canon_url", seen, bloomBc)
+    scope.cache(unseen
+      .withColumn("score", lit(1.0) / (lit(1.0) + col("depth")))
+      .withColumn("state", lit("pending"))
+      .withColumn("retry_count", lit(0))
+      .withColumn("discovered_epoch", lit(epoch))
+      .select("canon_url", "host", "depth", "score", "state", "retry_count",
+        "discovered_epoch"))
+  }
+
+  /** Frontier transitions: ONLY the scheduled rows change (fetched ok →
+    * fetched; error → retry w/ score decay, dead at maxRetries — T5/T7);
+    * everything else rests untouched in base/older deltas. The inner join
+    * is batch-sized on both sides: the per-epoch frontier write is
+    * O(batch + fresh), never O(frontier).
+    */
+  private def transition(ranked: DataFrame, fetched: DataFrame): DataFrame = {
+    val outcome = fetched.select(col("canon_url"), col("status").as("_status"))
+    ranked
+      .select("canon_url", "host", "depth", "score", "state", "retry_count",
+        "discovered_epoch")
+      .join(outcome, Seq("canon_url"))
+      .withColumn("state",
+        when(col("_status") === "ok", lit("fetched"))
+          .when(col("_status") === "error" && col("retry_count") + 1 >= maxRetries,
+            lit("failed"))
+          .otherwise(col("state")))
+      .withColumn("score",
+        when(col("_status") === "error" && col("retry_count") + 1 < maxRetries,
+          col("score") * 0.5).otherwise(col("score")))
+      .withColumn("retry_count",
+        when(col("_status") === "error", col("retry_count") + 1)
+          .otherwise(col("retry_count")))
+      .drop("_status")
+  }
+
+  /** K1 record sink + K2 job-control message (kafka_producer.py
+    * send_crawling_completion semantics: count==0 ⇒ fail with reason, no
+    * wall clock — completed_at is virtual epoch time in KST).
+    */
+  private def emitSink(dir: String, fresh: DataFrame, epoch: Long,
+      nEmitted: Long): Unit = {
+    graft.sinks.RecordSink.emit(
+      fresh.withColumn("epoch", lit(epoch)), "canon_url",
+      s"$dir/frontier-records", tag = s"e$epoch", bridgeUrl = sinkBridge)
+    val completedAt = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
+      .plusMinutes(epoch).atOffset(java.time.ZoneOffset.ofHours(9))
+      .format(java.time.format.DateTimeFormatter.ofPattern(
+        "yyyy-MM-dd'T'HH:mm:ssxxx"))
+    val control = Seq((s"epoch_$epoch",
+      if (nEmitted > 0) "done" else "fail",
+      "collection",
+      if (nEmitted > 0) null else "review count 0",
+      nEmitted, completedAt))
+      .toDF("job_id", "status", "step", "failure_reason",
+        "expected_count", "completed_at")
+    graft.sinks.RecordSink.emit(control, "job_id", s"$dir/job-control",
+      tag = s"e$epoch", bridgeUrl = sinkBridge)
+  }
+
+  /** Write `df` once into `table`'s staging dir and count its rows from
+    * the written footers, so the plan runs once; a crash re-runs the
+    * deterministic plan into the same dir. Returns (dir, rows), or None
+    * for zero rows — the dir is then deleted, because a row-less parquet
+    * dir cannot be schema-inferred on read.
+    */
+  private def stageCounted(table: String,
+      df: DataFrame): Option[(String, Long)] = {
+    val dir = store.stagingDir(table)
+    df.write.mode("overwrite").parquet(dir)
+    val n = spark.read.parquet(dir).count()
+    if (n == 0) { store.deletePath(dir); None } else Some((dir, n))
+  }
+
+  /** Incremental near-dup over the epoch's fetched documents (the q49
+    * steady-state shape as an ENGINE stage): reassemble each ok doc's text
+    * from its spans in offset order (the q43 formulation), simhash the
+    * batch with the production xxhash64/64 path, probe the persisted corpus
+    * signatures — candidate work O(batch × bucket occupancy), old-old pairs
+    * never generated — and append the batch's signatures so the next epoch
+    * probes this one too. Banding geometry is re-derived per epoch from the
+    * cumulative doc count (B is a pure cost knob, never a recall knob —
+    * NearDupSpec), so signatures are geometry-free and a growing corpus
+    * widens its own banding. sim_docs carries forward across empty epochs:
+    * a counter absent from one manifest would reset the cumulative count
+    * (and the derived banding geometry) on the next.
+    */
+  private def nearDup(m: store.Manifest, okDocs: DataFrame, nFetched: Long,
+      epoch: Long, scope: EpochScope): Commit = {
+    val priorDocs = m.counters.getOrElse("sim_docs", 0L)
+    if (nFetched == 0)
+      Commit(counters = Map("sim_docs" -> priorDocs, "neardup_pairs" -> 0L))
+    else {
+      val batchText = okDocs
+        .select(col("doc_id"), explode(col("spans")).as("span"))
+        .groupBy("doc_id")
+        .agg(array_join(transform(array_sort(filter(
+            collect_list(struct(col("span.offset"), col("span.text"))),
+            x => x.getField("text") =!= "")),
+          x => x.getField("text")), " ").as("text"))
+      // TOTAL over the batch: explode drops a doc whose spans array is
+      // empty, so the reassembly alone would skip it — re-anchor on the
+      // fetched set and coalesce to "" so every fetched doc reaches the
+      // signature step (simhashTotal then assigns the empty-token
+      // signature 0L); the sim_docs counter and the corpus_sim row count
+      // stay equal BY CONSTRUCTION, not by corpus luck
+      val batchDocs = okDocs.select("doc_id")
+        .join(batchText, Seq("doc_id"), "left")
+        .na.fill("", Seq("text"))
+      // cached: the pairs probe and the commit write both consume the
+      // batch signatures
+      val simNew = scope.cache(NearDup.simhashTotal(batchDocs,
+        NearDup.XxHashBits, NearDup.xxTokenHash))
+      val simDocs = priorDocs + nFetched
+      val blocks = Banding.blocksFor(simDocs, hashBits = NearDup.XxHashBits)
+      val pairsDf = (store.readTable(m, "corpus_sim") match {
+        case Some(c) => NearDup.incrementalFromSimhash(
+          simNew, c.select("doc_id", "simhash"), blocks, NearDup.XxHashBits)
+        case None => NearDup.pairsFromSimhash(simNew, blocks,
+          NearDup.XxHashBits)
+      }).withColumn("epoch", lit(epoch))
+      // the banded probe is the epoch's second-most-expensive plan: a
+      // separate count() action would execute it twice
+      val pairs = stageCounted("neardup_pairs", pairsDf)
+      // signature file sizing tracks the BATCH's row count: the cached
+      // plan carries the probe's shuffle partitioning, which at small
+      // batches would strew one near-empty file per partition into a
+      // table read every epoch
+      Commit(append = Map("corpus_sim" -> simNew.coalesce(filesFor(nFetched))),
+        appendPaths = pairs.map(p => "neardup_pairs" -> Seq(p._1)).toMap,
+        counters = Map("sim_docs" -> simDocs,
+          "neardup_pairs" -> pairs.map(_._2).getOrElse(0L)))
+    }
+  }
+
+  /** Media feature extraction over the epoch's fetched documents (the
+    * media half of the interleaved corpus, mirroring the near-dup stage's
+    * text half): each ok doc's media spans resolve their media_ref through
+    * the simulated media fetch and decode through the production JDK pixel
+    * path — REAL container bytes, REAL raster decode, luma-grid embedding
+    * — inside one mapPartitions (payload bytes live only inside the task;
+    * the table stores features, never payloads, so nothing raster-sized
+    * ever shuffles or persists). media_rows carries forward like
+    * sim_docs.
+    */
+  private def media(m: store.Manifest, okDocs: DataFrame,
+      nFetched: Long): Commit = {
+    val written: Option[(String, Long)] =
+      if (nFetched == 0) None
+      else {
+        val refs = okDocs
+          .select(col("doc_id"), explode(col("spans")).as("span"))
+          .filter(col("span.kind") === "media" && col("span.media_ref") =!= "")
+          .select(col("doc_id"), col("span.media_ref").as("media_ref"),
+            col("span.offset").as("offset"))
+        val theSeed = seed
+        val feats = refs.as[(String, String, Int)].mapPartitions { it =>
+          // partition-local codec init (the extractFeatures posture)
+          java.lang.System.setProperty("java.awt.headless", "true")
+          javax.imageio.ImageIO.setUseCache(false)
+          it.map { case (doc, ref, off) =>
+            val payload = MediaFetchSim.fetchBytes(ref, theSeed)
+            // shared decode-or-stub posture (incl. header-dims recovery
+            // for undecodable-but-headered bytes) — one implementation,
+            // so this stage and extractFeatures can never drift
+            val (w, h, emb, _) = Multimodal.imageFeatures(payload)
+            (doc, ref, off, w, h, payload.length, emb)
+          }
+        }.toDF("doc_id", "media_ref", "offset", "width", "height",
+          "n_bytes", "embedding")
+        // repartition AFTER the decode, never coalesce: coalesce is
+        // narrow, so it would collapse the uncached synth+decode map
+        // itself to the output file count — at small batches ONE task
+        // doing every JPEG round-trip (measured: +51 s/6-epoch run).
+        // The shuffle moves only feature rows (~hundreds of bytes each);
+        // file sizing tracks the fetched-doc count (spans/doc is a
+        // small corpus constant, so ~1M-row files up to that factor)
+        stageCounted("media_features", feats.repartition(filesFor(nFetched)))
+      }
+    Commit(
+      appendPaths = written.map(w => "media_features" -> Seq(w._1)).toMap,
+      counters = Map("media_rows" -> (m.counters.getOrElse("media_rows", 0L) +
+        written.map(_._2).getOrElse(0L))))
+  }
+
+  /** The frontier commit policy: a MAJOR fold every compactFrontierEvery
+    * epochs, else a MINOR fold every compactDeltaEvery epochs when there is
+    * a log to fold, else a PLAIN append of this epoch's delta (`delta` is
+    * None for an all-empty epoch: an empty parquet dir at the head of the
+    * delta list would break schema inference on read). Returns the
+    * frontier, head and seen_bloom tables and the counters it changes.
+    */
+  private def frontierCommit(m: store.Manifest, epoch: Long, cut: Long,
+      deltaAll: Option[DataFrame], delta: Option[DataFrame], deltaRows: Long,
+      pendingRows: Long, bloomNew: DataFrame, scope: EpochScope): Commit =
+    if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0)
+      majorFold(m, epoch, cut, delta, bloomNew, scope)
+    else {
+      // head meta rides every manifest so the validity check survives
+      // commits that don't touch the head — EXCEPT when this epoch's cut
+      // diverged from the head's: epochs under a different cut consume up
+      // to THAT cut per host, so if the floor later reverted, the validity
+      // arithmetic would under-count their consumption and re-validate an
+      // over-consumed head. Head + meta leave the store now instead
+      val kept =
+        if (m.counters.contains("head_epoch") &&
+            headBudget(m.counters, epoch, cut).isEmpty)
+          Commit(drop = Set("frontier_head"))
+        else Commit(counters = m.counters.filter(kv => HeadKeys(kv._1)))
+      // delta_rows: upper bound on the delta table's rows, carried for
+      // minor-fold file sizing only. Major folds drop the log and the
+      // counter together
+      val deltaRowsBound = m.counters.getOrElse("delta_rows", 0L) + deltaRows
+      // fold only when there is something to fold: new delta rows, or a
+      // log of more than one run (an empty epoch over an already-folded
+      // single run would rewrite identical bytes)
+      val minor = compactDeltaEvery > 0 && epoch % compactDeltaEvery == 0 &&
+        (delta.isDefined || m.tables.get("frontier_delta").exists(_.size > 1))
+      val frontier =
+        if (minor) minorFold(m, epoch, cut, deltaAll, delta, deltaRowsBound,
+          pendingRows, kept, scope)
+        else kept ++ Commit(append = delta.map("frontier_delta" -> _).toMap)
+      frontier ++ Commit(append = Map("seen_bloom" -> bloomNew),
+        counters = Map("delta_rows" -> deltaRowsBound))
+    }
+
+  /** MAJOR fold: resolve base ∪ deltas into a fresh base, move its
+    * terminal rows into the archive, rebuild the head from the written
+    * pending slice, fold the Bloom blob log, and drop the delta log.
+    */
+  private def majorFold(m: store.Manifest, epoch: Long, cut: Long,
+      delta: Option[DataFrame], bloomNew: DataFrame,
+      scope: EpochScope): Commit = {
+    val folded = FrontierLog.resolve(
+      delta.fold(frontierAll(m))(frontierAll(m).unionByName(_)))
+    // stage the fold once (state-partitioned, same dir the commit names),
+    // then derive the HEAD from the written bytes — the top-(R+1)*cut rows
+    // per host, the only rows the next R epochs of scheduling can possibly
+    // touch (headBudget). Building it here rides the fold's amortization:
+    // one extra host-keyed top-k pass over the pending slice every R
+    // epochs buys every in-between epoch a head-sized scheduler read
+    val foldDir = store.stagingDir("frontier_base")
+    folded.write.mode("overwrite").partitionBy("state").parquet(foldDir)
+    // bytes this major fold REWROTE (measured before terminals rename out:
+    // the write cost was paid for them too)
+    val foldBaseBytes = m.counters.getOrElse("fold_base_bytes", 0L) +
+      store.pathBytes(foldDir)
+    // archive-by-rename: fetched/failed are ABSORBING (a URL enters the
+    // frontier exactly once — candidates are anti-joined against seen —
+    // and only pending rows are ever scheduled), so the fold's terminal
+    // partitions are immutable forever. MOVE them — an O(1) directory
+    // rename inside the uncommitted staging space, crash-safe by the same
+    // argument as every staged write — into the append-only
+    // frontier_archive table instead of carrying them through every later
+    // fold: fold I/O is O(pending wavefront + delta window), independent
+    // of crawl AGE
+    val hasPending = store.pathExists(s"$foldDir/state=pending")
+    val archDirs: Seq[String] =
+      if (!hasPending) Seq.empty // draining fold (no pending rows left):
+        // keep the terminals in the base so the committed dir is never a
+        // row-less parquet root that later reads cannot schema-infer
+      else {
+        val arch = store.stagingDir("frontier_archive")
+        store.deletePath(arch) // clobber a crashed attempt's orphan
+        val moved = Seq("fetched", "failed")
+          .filter(st => store.pathExists(s"$foldDir/state=$st"))
+        moved.foreach(st =>
+          store.movePath(s"$foldDir/state=$st", s"$arch/state=$st"))
+        if (moved.isEmpty) Seq.empty else Seq(arch)
+      }
+    val headK = (compactFrontierEvery.toLong + 1L) * cut
+    // cached: the emptiness probe below and the committed write both
+    // consume the head — uncached, the per-host window over the fold's
+    // full pending slice would execute twice per fold epoch
+    val head =
+      if (scheduleFromHead && hasPending)
+        Some(scope.cache(Sched.headSlice(
+          spark.read.parquet(foldDir).filter(col("state") === "pending"),
+          headK)))
+      else None
+    // a frontier-draining fold produces an EMPTY head; committing it would
+    // leave a row-less parquet dir the next epoch cannot schema-infer —
+    // commit no head instead and drop any stale one, so the next epoch
+    // takes the full-view path and terminates normally
+    val headRows = head.filter(h => !h.isEmpty)
+    // the Bloom blob log folds here too: OR-merge every appended (epoch,
+    // segment) row plus this epoch's into one row per segment, so the
+    // per-epoch filter read merges O(segments + R) blobs, not
+    // O(epochs × segments) — OR is associative, so bit-identical
+    val bloomFolded = Bloom.foldSegments(
+      store.readTable(m, "seen_bloom") match {
+        case Some(prev) => prev.select("segment_id", "bloom").unionByName(bloomNew)
+        case None => bloomNew
+      })
+    Commit(
+      replace = headRows.map("frontier_head" -> _).toMap +
+        ("seen_bloom" -> bloomFolded),
+      replacePaths = Map("frontier_base" -> Seq(foldDir)),
+      appendPaths =
+        if (archDirs.nonEmpty) Map("frontier_archive" -> archDirs) else Map.empty,
+      counters = Map("fold_base_bytes" -> foldBaseBytes) ++
+        headRows.map(_ => headMeta(epoch, headK, cut)).getOrElse(Map.empty),
+      drop = Set("frontier_delta") ++
+        (if (headRows.isEmpty) Set("frontier_head") else Set.empty))
+  }
+
+  /** MINOR fold: resolve the delta LOG into one run (latest row per key —
+    * view-identical, the same resolution the major fold would apply) and
+    * refresh the head from head ∪ delta. Touches O(delta window) bytes;
+    * the base is NEVER read or written here — this is what lets the major
+    * O(pending) rewrite cadence stretch while the delta list and the
+    * scheduler head stay compact. `kept` is the head part to commit when
+    * no refresh happens.
+    */
+  private def minorFold(m: store.Manifest, epoch: Long, cut: Long,
+      deltaAll: Option[DataFrame], delta: Option[DataFrame],
+      deltaRowsBound: Long, pendingRows: Long, kept: Commit,
+      scope: EpochScope): Commit = {
+    // the prior log is deltaAll, already read ONCE for this epoch's
+    // schedule — a second readTable here would pay the delta list's
+    // file-listing + footer read again
+    val allDelta = (deltaAll ++ delta).reduce(_.unionByName(_))
+    val runDir = store.stagingDir("frontier_delta")
+    FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound))
+      .write.mode("overwrite").parquet(runDir)
+    val foldDeltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) +
+      store.pathBytes(runDir)
+    // Head refresh: head' = top-K' per host of pending(head ∪ delta), K' =
+    // the budget headBudget says is left. The head at `he` contained the
+    // true per-host top-hk; since then ≤ (epoch−he)·cut rows per host left
+    // pending and every touched or fresh row is in the delta, so
+    // pending(head ∪ delta) ⊇ the true per-host top-K' — and its top-K'
+    // slice EQUALS the true top-K' (same total order as the scheduler).
+    // Re-dating the head to `epoch` with budget K' makes the validity check
+    // exact, and sweeps consumed rows out of storage. Skipped when the
+    // head is off (a store resumed head-off must not pay the per-host
+    // window sort for a head no scheduler reads; meta is carried
+    // unchanged) and when no pending row is left to refresh from
+    val refresh: Option[(DataFrame, Long)] = for {
+      (he, kRem) <- headBudget(m.counters, epoch, cut)
+      if scheduleFromHead && kRem >= cut && pendingRows > 0
+      h <- store.readTable(m, "frontier_head")
+    } yield (scope.cache(Sched.headSlice(
+      FrontierLog.pendingResolved(h, Some(allDelta.filter(col("seq") > he))),
+      kRem)), kRem)
+    // a drained head (all consumed, nothing fresh) must not commit: a
+    // row-less parquet dir breaks schema inference, and pending rows may
+    // still exist below the original cut — drop head + meta so later
+    // epochs take the exact full-view path
+    val head = refresh match {
+      case Some((h, k)) if !h.isEmpty =>
+        Commit(replace = Map("frontier_head" -> h),
+          counters = headMeta(epoch, k, cut))
+      case Some(_) => Commit(drop = Set("frontier_head"))
+      case None => kept
+    }
+    head ++ Commit(replacePaths = Map("frontier_delta" -> Seq(runDir)),
+      counters = Map("fold_delta_bytes" -> foldDeltaBytes))
+  }
+
+  /** One pass over every append-rooted table after the epoch commit
+    * (corpus_sim is read ON THE EPOCH PATH by the banded probe, so an
+    * unbounded root list would grow every listing and manifest linearly
+    * with crawl AGE): a table over the root cap has its newer roots' files
+    * merge-moved (renames, zero rewrite — all four tables are immutable
+    * appends) into its OLDEST root, and one manifest swap retires them.
+    *
+    * The target being the PERMANENT head root makes every file move at
+    * most once over the table's lifetime: later appends land AFTER the
+    * head in the manifest list, so a consolidated file is never a move
+    * source again, and file names never grow past one prefix. The r<i>-
+    * prefix disambiguates same-named files from different source roots
+    * within one pass; across passes the part files' write-job UUIDs
+    * already make names unique.
+    *
+    * Crash-safe by ordering: the epoch commit preceding this pass
+    * references the old roots AND the head, renames keep each file in
+    * exactly one referenced location at every instant (multi-root reads
+    * stay complete and duplicate-free), and a crash mid-move leaves a
+    * still-over-cap list the next pass converges. Emptied roots leave the
+    * manifest at the swap and expire with the next expireUnreferenced
+    * sweep.
+    */
+  private def consolidateAppendRoots(committed: store.Manifest): Unit = {
+    val swaps = AppendRootTables.flatMap { case (t, subdirs) =>
+      val roots = committed.tables.getOrElse(t, Seq.empty)
+      if (roots.size <= archiveMaxRoots) None
+      else {
+        roots.tail.zipWithIndex.foreach { case (root, i) =>
+          subdirs.foreach { sub =>
+            val suffix = if (sub.isEmpty) "" else s"/$sub"
+            store.moveFilesInto(s"$root$suffix", s"${roots.head}$suffix",
+              s"r$i-")
+          }
+        }
+        Some(t -> Seq(roots.head))
+      }
+    }
+    if (swaps.nonEmpty)
+      store.commit(committed.epoch, replace = Map.empty, append = Map.empty,
+        counters = committed.counters, replacePaths = swaps.toMap)
   }
 
   /** Run epochs until `maxEpochs` or an empty batch (exhausted frontier). */
@@ -1092,12 +1002,10 @@ final class EpochDriver(
   }
 
   /** Append-only terminal-history archive (fetched/failed rows renamed out
-    * of the fold window — see the archive-by-rename block in runEpoch).
-    * Read per-root and unioned: each archived dir carries hive-style
-    * `state=` partition subdirs, and multi-root parquet reads reject hive
-    * inference. Archive roots number one per fold-with-terminals — bounded
-    * by crawl length / compaction cadence — and NOTHING on the epoch path
-    * reads them; only this full-history view does.
+    * of the fold window — see majorFold). Read per-root and unioned: each
+    * archived dir carries hive-style `state=` partition subdirs, and
+    * multi-root parquet reads reject hive inference. NOTHING on the epoch
+    * path reads the archive; only this full-history view does.
     */
   private def archive(m: store.Manifest): Option[DataFrame] =
     m.tables.get("frontier_archive")
@@ -1125,27 +1033,17 @@ final class EpochDriver(
         "status", "n_spans", "n_urls_out"))
   def metrics(): Option[DataFrame] =
     store.latest().flatMap(m => store.readTable(m, "metrics"))
-  def docs(): Option[DataFrame] =
-    store.latest().flatMap(m => store.readTable(m, "fetch_result"))
-      .map(_.filter(col("status") === "ok")
-        .select(col("canon_url").as("doc_id"), col("depth"), col("spans")))
 }
 
 object EpochDriver {
-  /** Version of the snapshot-store table layout. v1 = monolithic frontier
-    * replaced per epoch + separate docs/fetch_log appends; v2 =
-    * log-structured frontier (frontier_base + frontier_delta, FrontierLog)
-    * + single fetch_result lineage table. A v1 store has no
-    * frontier_base/fetch_result to read, so resume must refuse loudly.
-    *
-    * The terminal archive (frontier_archive) did NOT bump this version
-    * deliberately: a v2 store whose base still carries its full terminal
-    * history resumes CORRECTLY — the first fold renames that history into
-    * the archive (one rename per state, no rewrite) and later folds see
-    * only the live window, so old stores migrate themselves instead of
-    * refusing.
+  /** Version of the snapshot-store table layout; a store of any other
+    * layout is refused on resume, never migrated. v3 is the layout whose
+    * every manifest carries all cfg_* keys, the versioned `robots` table
+    * with `robots_floor_ms`, the exact `pending_rows` counter, and
+    * `head_cut` beside any head meta, with terminal history in
+    * `frontier_archive` — the engine reads each of these unconditionally.
     */
-  val StoreLayoutVersion = 2L
+  val StoreLayoutVersion = 3L
 
   /** Live seen-partition count at which the per-cadence generational fold
     * escalates to a full fold. Bounds the per-epoch bucketed-scan overhead
@@ -1154,4 +1052,32 @@ object EpochDriver {
     * seen SET is identical under any fold schedule.
     */
   val SeenFullFoldPartitions = 16
+
+  private val HeadKeys = Set("head_epoch", "head_k", "head_cut")
+
+  /** Append-rooted tables and the partition dirs inside each root
+    * (Seq("") = flat table), consolidated after every epoch commit.
+    */
+  private val AppendRootTables: Seq[(String, Seq[String])] = Seq(
+    "frontier_archive" -> Seq("state=fetched", "state=failed"),
+    "corpus_sim" -> Seq(""),
+    "neardup_pairs" -> Seq(""),
+    "media_features" -> Seq(""))
+
+  /** What one part of an epoch changes in the snapshot — the arguments of
+    * SnapshotStore.commit. The parts of an epoch merge (right-biased) into
+    * its single commit.
+    */
+  private final case class Commit(
+      replace: Map[String, DataFrame] = Map.empty,
+      append: Map[String, DataFrame] = Map.empty,
+      counters: Map[String, Long] = Map.empty,
+      appendPaths: Map[String, Seq[String]] = Map.empty,
+      replacePaths: Map[String, Seq[String]] = Map.empty,
+      drop: Set[String] = Set.empty) {
+    def ++(o: Commit): Commit = Commit(replace ++ o.replace,
+      append ++ o.append, counters ++ o.counters,
+      appendPaths ++ o.appendPaths, replacePaths ++ o.replacePaths,
+      drop ++ o.drop)
+  }
 }

@@ -184,14 +184,9 @@ object RecordSink {
     } + "\""
 
   /** Read a topic directory back as (key, value-json) rows — the test-side
-    * consumer. For every emission that committed a manifest, only its
-    * manifest-listed batch files are read (orphans from retried stages —
-    * same tag, unlisted file — are ignored). Batch files whose TAG appears
-    * in no manifest are legacy/foreign emissions (written before the
-    * manifest scheme, or by another producer) and are read as-is: the
-    * per-TAG rule means adding manifested emissions to an old directory
-    * never silently drops the old records, while a tag that HAS a manifest
-    * still excludes its orphans.
+    * consumer. Only batch files a manifest lists are read: orphans from
+    * retried stages (same tag, unlisted file) and the debris of an emission
+    * that died before its manifest commit are ignored.
     */
   def readTopic(spark: org.apache.spark.sql.SparkSession,
       topicDir: String): DataFrame = {
@@ -212,24 +207,7 @@ object RecordSink {
       node.get("files").elements().asScala.map(f =>
         new HPath(dir, f.asText()).toString).toSeq
     }
-    val manifestTags = manifests.map(p =>
-      p.getName.stripPrefix("manifest-").stripSuffix(".json")).toSet
-    // Legacy fallback applies ONLY to pre-attempt-disjoint names (no
-    // `-a<attempt>` segment): current-generation writers ALWAYS emit the
-    // attempt id, so an attempt-tagged file whose tag has no manifest is
-    // crash debris — an emission that died between task writes and the
-    // driver's manifest commit — and reading it back would reopen exactly
-    // the partial/duplicate window the manifest closes (possibly mixing
-    // two attempts' differently-packed batches of one partition).
-    val batchName = "^batch-(.*)-p\\d+(-a\\d+)?-\\d+\\.json$".r
-    val legacy = entries.collect {
-      case p if (p.getName match {
-        case batchName(tag, attempt) =>
-          attempt == null && !manifestTags.contains(tag)
-        case _ => false
-      }) => p.toString
-    }
-    val files = (listed ++ legacy).sorted
+    val files = listed.sorted
     if (files.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -1,5 +1,7 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -7,7 +9,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ⇄ Expression bridge. Spark 4 moved these conversions behind
   * private[sql] (org.apache.spark.sql.classic.ExpressionUtils); custom
   * Catalyst expressions still need them to surface as user-facing Columns,
-  * so this shim lives inside the org.apache.spark.sql namespace.
+  * so this shim lives inside the org.apache.spark.sql namespace. It also
+  * answers the private[spark] listener-bus lookup StageProfiler needs.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -20,4 +23,8 @@ object Bridge {
     */
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
+
+  /** Is `l` registered on `sc`'s listener bus (private[spark])? */
+  def hasListener(sc: SparkContext, l: SparkListenerInterface): Boolean =
+    sc.listenerBus.listeners.contains(l)
 }

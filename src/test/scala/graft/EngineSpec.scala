@@ -262,7 +262,7 @@ class EngineSpec extends SparkSpecBase {
     // two attempts of partition 0 packed the same rows into batches in
     // DIFFERENT orders (speculative execution / zombie task); the manifest
     // committed attempt 7 — readTopic must return exactly attempt 7's
-    // records, and a legacy unmanifested tag must still read as-is
+    // records, and nothing from a tag no manifest lists
     val topic = java.nio.file.Paths.get(tmpDir(), "t")
     java.nio.file.Files.createDirectories(topic)
     def put(name: String, keys: String*): Unit =
@@ -275,17 +275,16 @@ class EngineSpec extends SparkSpecBase {
     put("batch-e1-p0-a9-1.json", "r2")
     java.nio.file.Files.writeString(topic.resolve("manifest-e1.json"),
       """{"files":["batch-e1-p0-a7-0.json","batch-e1-p0-a7-1.json"]}""")
-    put("batch-old-p0-0.json", "legacy") // pre-manifest generation, no manifest
-    // crash debris: a CURRENT-generation emission (attempt-tagged names)
-    // that died between task writes and the driver's manifest commit —
-    // possibly two attempts of one partition with different batch packing.
-    // It must NOT be read back as "legacy": that would reopen the
-    // partial/duplicate window the manifest exists to close.
+    put("batch-old-p0-0.json", "legacy") // no manifest, no attempt id
+    // crash debris: an emission that died between task writes and the
+    // driver's manifest commit — possibly two attempts of one partition
+    // with different batch packing. Reading any unlisted file back would
+    // reopen the partial/duplicate window the manifest exists to close.
     put("batch-crashed-p0-a3-0.json", "x1", "x2")
     put("batch-crashed-p0-a5-0.json", "x2", "x1") // second attempt, same rows
     val got = graft.sinks.RecordSink.readTopic(spark, topic.toString)
       .select("key").collect().map(_.getString(0)).sorted
-    assert(got.toSeq == Seq("legacy", "r1", "r2", "r3"),
+    assert(got.toSeq == Seq("r1", "r2", "r3"),
       s"readTopic returned ${got.mkString(",")}")
   }
 
@@ -351,12 +350,9 @@ class EngineSpec extends SparkSpecBase {
     // budget/delay — a visible scheduling change
     val updated = Sched.robotsFor((0 until nHosts).map(SimWeb.hostName), seed)
       .map { case (h, _, dis) => (h, 4000L, dis) }
-    // threshold pinned off: this test pins head-rebuild mechanics and
-    // must stay immune to any future cost-guard default
     def driver(dir: String) = new EpochDriver(spark,
       new SnapshotStore(dir, spark), seed, nHosts,
-      epochBudgetMs = budget, compactFrontierEvery = 2,
-      headMaxPendingFraction = Double.PositiveInfinity)
+      epochBudgetMs = budget, compactFrontierEvery = 2)
     // A: update staged, then KILLED and resumed by a fresh driver (whose
     // constructor generator still carries the ORIGINAL robots)
     val dirA = tmpDir(); val a1 = driver(dirA)
@@ -400,8 +396,7 @@ class EngineSpec extends SparkSpecBase {
     def driver(dir: String, head: Boolean) = new EpochDriver(spark,
       new SnapshotStore(dir, spark), seed, nHosts,
       epochBudgetMs = budget, compactFrontierEvery = 8,
-      scheduleFromHead = head,
-      headMaxPendingFraction = Double.PositiveInfinity)
+      scheduleFromHead = head)
     val dirA = tmpDir(); val a = driver(dirA, head = true)
     a.init(seeds); a.runEpoch()
     assert(a.lastSchedSource == "head", "test premise: head in use")
@@ -432,13 +427,10 @@ class EngineSpec extends SparkSpecBase {
     // budget cut GROWS (8000/100 = 80 rows/host); the old head (sized
     // under the old cut) can no longer bound per-host consumption
     val updated = orig.updated(0, (orig.head._1, 100L, orig.head._3))
-    // threshold pinned off: head-drop mechanics need the head actually
-    // in use regardless of any future cost-guard default
     def driver(dir: String, head: Boolean) = new EpochDriver(spark,
       new SnapshotStore(dir, spark), seed, nHosts,
       epochBudgetMs = budget, compactFrontierEvery = 2,
-      scheduleFromHead = head,
-      headMaxPendingFraction = Double.PositiveInfinity)
+      scheduleFromHead = head)
     val dirA = tmpDir(); val a = driver(dirA, head = true)
     a.init(seeds); a.runEpoch(); a.runEpoch()
     assert(a.lastSchedSource == "head", "test premise: head in use pre-update")

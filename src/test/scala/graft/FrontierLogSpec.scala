@@ -403,9 +403,24 @@ class FrontierLogSpec extends SparkSpecBase {
     val cut = initK / 17L
     assert(cut > 0 && initK == 17L * cut)
     val bSources = scala.collection.mutable.ArrayBuffer.empty[String]
-    val ma = (1 to 6).map(_ => a.runEpoch())
+    // pending_rows is EXACT by the state machine: checked against the
+    // merge-on-read view after every epoch — plain commits (odd epochs),
+    // A's major folds and B's minor folds (even epochs) — covering
+    // fetched, failed at maxRetries, retries staying pending and fresh
+    // emissions
+    def pendingExact(d: EpochDriver, s: SnapshotStore): Unit = {
+      val man = s.latest().get
+      val actual = d.frontier().filter(col("state") === "pending").count()
+      assert(man.counters("pending_rows") == actual,
+        s"epoch ${man.epoch}: pending_rows=${man.counters("pending_rows")} " +
+          s"but the view has $actual")
+    }
+    val ma = (1 to 6).map { _ =>
+      val m = a.runEpoch(); pendingExact(a, aStore); m
+    }
     val mb = (1 to 6).map { _ =>
-      val m = b.runEpoch(); bSources += b.lastSchedSource; m
+      val m = b.runEpoch(); bSources += b.lastSchedSource
+      pendingExact(b, bStore); m
     }
     assert(ma == mb, "minor-fold regime changed epoch counters")
     assert(a.frontier().collect().map(_.toSeq).toSet ==
@@ -465,91 +480,38 @@ class FrontierLogSpec extends SparkSpecBase {
       "head-off minor fold re-dated the head meta")
   }
 
-  test("head cost guard: an engaged threshold never builds a head, exact vs a head-off twin, pending_rows exact") {
-    // guard MECHANICS pin (the default is engage-always — BASELINE.md
-    // round 5 measured head-ON faster even at hosts*K ~50x pending, so
-    // the threshold is an operator knob, set explicitly here): hosts*K
-    // far above the pending set, fraction 0.5 ⇒ every build — init,
-    // major folds, minor folds — must be skipped while staying
-    // batch-exact against a head-disabled twin. 10 hosts, cut =
-    // 8000/floor >= 2 rows/host, K = 3*cut: hosts*K >= 60 vs ~40 pending
-    val nHosts = 10
-    val seeds = SimWeb.seedUrls(40, nHosts, seed)
-    val gDir = tmpDir()
-    val gStore = new SnapshotStore(gDir, spark)
-    // cadences chosen so four epochs hit all three commit paths with the
-    // counter carried through each: plain (1, 3), minor fold (2), major
-    // fold (4, footer-derived re-seed)
-    val g = new EpochDriver(spark, gStore, seed, nHosts,
-      epochBudgetMs = 8000L, compactFrontierEvery = 4, compactDeltaEvery = 2,
-      headMaxPendingFraction = 0.5)
-    val f = new EpochDriver(spark, new SnapshotStore(tmpDir(), spark), seed,
-      nHosts, epochBudgetMs = 8000L, compactFrontierEvery = 4,
-      compactDeltaEvery = 2, scheduleFromHead = false)
-    g.init(seeds); f.init(seeds)
-    assert(gStore.latest().get.tables.get("frontier_head").isEmpty,
-      "guard did not skip the init head in the degenerate geometry")
-    (1 to 4).foreach { _ =>
-      val mg = g.runEpoch(); val mf = f.runEpoch()
-      assert(mg == mf, "guard-skipped head changed epoch counters")
-      assert(g.lastSchedSource == "full",
-        "no head was built, so scheduling must take the full-view path")
-      val man = gStore.latest().get
-      assert(man.tables.get("frontier_head").isEmpty &&
-        !man.counters.contains("head_epoch"),
-        "degenerate geometry committed a head anyway")
-      // pending_rows is EXACT by the state machine — against the actual
-      // merge-on-read view every epoch (covers fetched, failed at
-      // maxRetries, retries staying pending, and fresh emissions)
-      val actual = g.frontier().filter(col("state") === "pending").count()
-      assert(man.counters("pending_rows") == actual,
-        s"pending_rows=${man.counters("pending_rows")} but view has $actual")
-    }
-    assert(g.frontier().collect().map(_.toSeq).toSet ==
-      f.frontier().collect().map(_.toSeq).toSet,
-      "guard-skipped head changed the frontier view")
-    // the engaged side is pinned by the head tests above: their 4000-seed
-    // geometries run under the engage-always default and assert
-    // lastSchedSource == "head" throughout
-  }
-
-  test("legacy store without pending_rows: head engages as before, the next major fold re-seeds the counter") {
-    // a pre-counter store (round-4 layout) carries no pending_rows: plain
-    // commits must neither require nor invent it, an UNKNOWN count must
-    // engage the head (guard forall-on-None — the behavior every existing
-    // store was built under), and the next major fold re-seeds the counter
-    // from the folded base's footers so the guard turns exact from there
-    val nHosts = 20
-    val seeds = SimWeb.seedUrls(4000, nHosts, seed)
+  test("a store of an older layout, or missing a cfg key, is refused naming the key") {
+    // stores are never migrated: layout 3 is the only layout the engine
+    // reads, and a manifest without one of the cfg_* keys was written by
+    // code older than that key, so its meaning is unknown
     val dir = tmpDir()
-    val store = new SnapshotStore(dir, spark)
-    val d = new EpochDriver(spark, store, seed, nHosts,
-      epochBudgetMs = 2000L, compactFrontierEvery = 2)
-    d.init(seeds); d.runEpoch(); d.runEpoch()
-    // simulate the legacy manifest: strip pending_rows in place
-    val v = store.latestVersion().get
+    def driver() = new EpochDriver(spark, new SnapshotStore(dir, spark),
+      seed, 10, epochBudgetMs = 8000L)
+    val d = driver()
+    d.init(SimWeb.seedUrls(40, 10, seed)); d.runEpoch()
+    val v = new SnapshotStore(dir, spark).latestVersion().get
     val mf = java.nio.file.Paths.get(dir, "manifest", s"v$v.json")
+    val original = java.nio.file.Files.readAllBytes(mf)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(java.nio.file.Files.readAllBytes(mf))
-    node.get("counters")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .remove("pending_rows")
-    java.nio.file.Files.write(mf, mapper.writeValueAsBytes(node))
-    val d2 = new EpochDriver(spark, new SnapshotStore(dir, spark), seed,
-      nHosts, epochBudgetMs = 2000L, compactFrontierEvery = 2)
-    d2.runEpoch() // epoch 3, plain commit: no counter to carry, head in use
-    assert(d2.lastSchedSource == "head",
-      "legacy store (no pending_rows) must keep the head engaged")
-    val m3 = new SnapshotStore(dir, spark).latest().get
-    assert(!m3.counters.contains("pending_rows"),
-      "a plain commit cannot invent the counter it never had")
-    d2.runEpoch() // epoch 4, major fold: footer-derived re-seed
-    val m4 = new SnapshotStore(dir, spark).latest().get
-    val actual = d2.frontier().filter(col("state") === "pending").count()
-    assert(m4.counters.get("pending_rows").contains(actual),
-      s"major fold did not re-seed pending_rows (=${m4.counters.get("pending_rows")}, view $actual)")
-    assert(m4.tables.contains("frontier_head"),
-      "worthwhile geometry must still rebuild the head at the fold")
+    def refusal(edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit)
+        : String = {
+      val node = mapper.readTree(original)
+      edit(node.get("counters")
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
+      java.nio.file.Files.write(mf, mapper.writeValueAsBytes(node))
+      intercept[IllegalArgumentException](driver().runEpoch()).getMessage
+    }
+    val layout2 = refusal { c => c.put("cfg_store_layout", 2L); () }
+    assert(layout2.contains("cfg_store_layout") && layout2.contains("snapshot=2"),
+      s"layout-2 refusal does not name the key: $layout2")
+    Seq("cfg_store_layout", "cfg_bloom_hash_version", "cfg_neardup",
+      "cfg_media").foreach { k =>
+      val msg = refusal { c => c.remove(k); () }
+      assert(msg.contains(k), s"missing-$k refusal does not name the key: $msg")
+    }
+    // the unedited manifest still resumes
+    java.nio.file.Files.write(mf, original)
+    assert(driver().runEpoch()("epoch") == 2L)
   }
 
   test("an empty-head fold commits no row-less head table; next epoch survives on the full path") {
